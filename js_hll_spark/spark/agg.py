@@ -1,4 +1,4 @@
-"""Mergeable sketch aggregation over DataFrames — the two-phase harness.
+"""Mergeable HLL aggregation over DataFrames — the two-phase harness.
 
 Why not a GROUPED_AGG pandas UDF straight on raw rows: that shuffles the
 *raw rows* to their groups — fatal at 10^12 rows (SURVEY.md §4.3-1).
@@ -7,18 +7,15 @@ Instead:
 1. **Hash JVM-side**: ``F.xxhash64`` (or a murmur column) inside
    whole-stage codegen; Catalyst prunes the scan down to (keys, value).
 2. **Partial stage** (``mapInPandas``, no shuffle): every input partition
-   reduces to one register file per group key via numpy
-   ``np.maximum.at`` over Arrow batches. Output: one row per
-   (partition, key) carrying ~m bytes of raw registers.
-3. **Optional tree level**: when the partial count per key is large
-   (many input partitions), an intermediate merge keyed by
-   ``(key, partition_id % fanin)`` bounds the final task's input. The
-   union monoid (commutative/associative/idempotent max,
-   /root/reference/src/hll.js:345-346) makes this lossless — the same
-   property that licenses AQE re-merging and salting.
-4. **Final merge + estimate** (``applyInPandas`` after a shuffle of
-   sketches only): element-wise ``np.maximum.reduce``, then the
-   estimator once per group.
+   reduces to one sketch per group key via numpy register updates over
+   Arrow batches. Output: one row per (partition, key).
+3. **Final merge + estimate** (after a shuffle of sketches only): union
+   — element-wise register max for dense files, the union monoid of
+   src/hll.js:345-346 — then the estimator once per group.
+
+Steps 2-3 are the shared sketch harness (:mod:`.sketch_agg`, kind
+``'hll'``) for engine='python'/'explicit'; engine='sql' computes the
+registers in Catalyst instead (:func:`hll_sketch_sql`).
 
 Skew note: the partial stage is itself the skew mitigation — a hot key
 ('en' at 60%) still produces exactly one partial row per partition, so
@@ -28,7 +25,7 @@ number of raw rows.
 
 from __future__ import annotations
 
-from typing import Iterator, Sequence
+from typing import Sequence
 
 import numpy as np
 import pandas as pd
@@ -42,331 +39,53 @@ from pyspark.sql.types import (
 )
 
 from ..config import HLLConfig
-from ..core.hll import HLL, estimate_from_registers, update_registers
-from .blocks import checkpoint_rdd_id as _checkpoint_rdd_id
-from ..hashing import murmur3_64_bytes, murmur3_64_uint64, to_uint64
+from ..core.hll import HLL, estimate_from_registers
+from .sketch_agg import _VAL, aggregate_sketches, keyed_carry_stream, merge_sketches
 
-_HASH_COL = "__h64"
 _SKETCH_COL = "sketch"
-_PID_COL = "__pid"
 _ROWS_COL = "rows_seen"
+_NDV_FIELDS = [StructField("ndv", DoubleType(), False)]
 
 
-
-def eq_null_safe_cond(left, right, keys):
-    """Fold an eqNullSafe key-equality join condition — a plain equality
-    join silently DROPS null-keyed groups (NULL = NULL is not true in
-    join conditions), the repo's recurring null-group bug class; every
-    keyed sketch merge joins through this."""
-    cond = None
-    for k in keys:
-        c = left[k].eqNullSafe(right[k])
-        cond = c if cond is None else cond & c
-    return cond
-
-def _null_safe_change_mask(kcols: list[pd.Series]) -> np.ndarray:
-    """Row mask marking group boundaries in key-sorted batches, treating
-    null == null. Arrow->pandas surfaces nullable numeric/timestamp keys
-    as NaN/NaT, and NaN != NaN would otherwise split a null-keyed group
-    into one group per row."""
-    n = len(kcols[0])
-    change = np.zeros(n, dtype=bool)
-    change[0] = True
-    for kc in kcols:
-        na = kc.isna().to_numpy()
-        vals = kc.to_numpy()
-        with np.errstate(invalid="ignore"):
-            neq = vals[1:] != vals[:-1]
-        neq = np.asarray(neq, dtype=bool)
-        # a pair of nulls is never a boundary; a single null always is
-        # (covers float columns where NaN != NaN already reads True and
-        # object columns where None != None reads False)
-        both_na = na[1:] & na[:-1]
-        one_na = na[1:] ^ na[:-1]
-        change[1:] |= (neq & ~both_na) | one_na
-    return change
+def _ndv(s: HLL) -> dict:
+    return {"ndv": s.algorithm_cardinality()}
 
 
-def _key_tuple(kcols: list[pd.Series], i: int) -> tuple:
-    """Group-key tuple at row ``i`` with NaN/NaT normalized to None so
-    tuple equality across Arrow batch boundaries is null-safe."""
-    vals = []
-    for kc in kcols:
-        v = kc.iloc[i]
-        vals.append(None if pd.isna(v) else v)
-    return tuple(vals)
-
-
-def norm_group_key(g) -> tuple:
-    """groupby().indices key as a NaN/NaT->None-normalized tuple.
-    pandas materializes a FRESH NaN object per Arrow batch, so
-    un-normalized dict lookups miss and a null-keyed group accretes one
-    accumulator per batch instead of one per partition (results stay
-    correct — the merge re-reduces — but state and shuffle inflate by
-    the batch count)."""
-    gk = g if isinstance(g, tuple) else (g,)
-    return tuple(None if pd.isna(v) else v for v in gk)
-
-
-def _hash_column(col: str, method: str):
-    if method == "xxhash64":
-        return F.xxhash64(F.col(col))
-    raise ValueError(f"unknown JVM hash method {method!r}")
-
-
-def _partial_schema(key_fields: list[StructField]) -> StructType:
-    return StructType(
-        key_fields
-        + [
-            StructField(_PID_COL, LongType(), False),
-            StructField(_SKETCH_COL, BinaryType(), False),
-            StructField(_ROWS_COL, LongType(), False),
-        ]
-    )
-
-
-def _make_partial_fn(
-    keys: Sequence[str],
-    config: HLLConfig,
-    hash_in_python: bool,
-    memory_budget_bytes: int = 256 << 20,
-):
-    """mapInPandas function: stream Arrow batches, keep one register file
-    per key for the whole partition, emit at iterator exhaustion.
-
-    Spill-aware: when the partial state (m bytes per live key) exceeds
-    ``memory_budget_bytes`` — possible with very high-cardinality group
-    keys — the accumulated partials are flushed as output rows and the
-    dict reset. Duplicated (partition, key) partial rows are harmless:
-    the merge stage max-reduces them (union monoid)."""
-
-    m = config.m
-    max_keys = max(1, memory_budget_bytes // m)
-
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from pyspark import TaskContext
-
-        pid = TaskContext.get().partitionId() if TaskContext.get() else -1
-        regs: dict[tuple, np.ndarray] = {}
-        rows: dict[tuple, int] = {}
-
-        def flush() -> pd.DataFrame:
-            out = {}
-            for i, k in enumerate(keys):
-                out[k] = [gk[i] for gk in regs]
-            out[_PID_COL] = [pid] * len(regs)
-            out[_SKETCH_COL] = [r.tobytes() for r in regs.values()]
-            out[_ROWS_COL] = [rows[gk] for gk in regs]
-            regs.clear()
-            rows.clear()
-            return pd.DataFrame(out)
-
-        for pdf in batches:
-            if hash_in_python:
-                col = pdf[_HASH_COL]
-                if col.dtype == object or str(col.dtype).startswith("str"):
-                    h = murmur3_64_bytes(col)
-                else:
-                    h = murmur3_64_uint64(to_uint64(col.to_numpy()))
-            else:
-                h = to_uint64(pdf[_HASH_COL].to_numpy())
-            if not keys:
-                r = regs.get(())
-                if r is None:
-                    r = regs[()] = np.zeros(m, dtype=np.uint8)
-                    rows[()] = 0
-                update_registers(r, h, config)
-                rows[()] += len(pdf)
-                continue
-            groups = pdf.groupby(list(keys), sort=False, dropna=False).indices
-            for gkey, idx in groups.items():
-                gk = norm_group_key(gkey)
-                r = regs.get(gk)
-                if r is None:
-                    r = regs[gk] = np.zeros(m, dtype=np.uint8)
-                    rows[gk] = 0
-                update_registers(r, h[idx], config)
-                rows[gk] += len(idx)
-            if len(regs) > max_keys:
-                yield flush()
-        if regs:
-            yield flush()
-
-    return fn
-
-
-def _zero_partial_seed(spark, config: HLLConfig, schema: StructType) -> DataFrame:
-    """One zero-state partial row, built ON AN EXECUTOR via
-    spark.range(1) (Spark skips Python workers entirely for empty
-    relations, so a partial-fn-side fallback never runs; and a
-    driver-side literal would embed m bytes in the plan). Union it into
-    the global (no-keys) partials so an empty/all-null input still
-    yields one row with ndv 0 — countDistinct returns 0, not no rows."""
-    m = config.m
-
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for _ in batches:
-            pass
-        yield pd.DataFrame(
-            {
-                _PID_COL: [-1],
-                _SKETCH_COL: [np.zeros(m, dtype=np.uint8).tobytes()],
-                _ROWS_COL: [0],
-            }
-        )
-
-    return spark.range(1).mapInPandas(fn, schema=schema)
-
-
-def keyed_carry_stream(partials, group_cols, schema, *, prepare, fold, finish):
-    """The sorted-stream-with-carry skeleton shared by the r4 batched
-    keyed merges (HLL register merge, tree-fanin intermediate, and the
-    companion-sketch merge in sketch_agg) — ONE implementation of the
-    subtle part: null-safe group boundaries, per-segment folding, the
-    cross-Arrow-batch carry, the end-of-iterator flush. (The r3
-    NaN!=NaN null-group-split bug lived exactly in this skeleton; the
-    legacy assembly/rollup streams in this file predate the helper and
-    keep their own proven per-row variants.)
-
-    ``prepare(pdf) -> batch_ctx`` runs once per Arrow batch (vectorized
-    extraction); ``fold(state_or_None, batch_ctx, start, end) -> state``
-    folds one contiguous same-key run; ``finish(key_tuple, state) ->
-    row tuple`` emits a completed group. NaN/NaT keys surface as None
-    in the key tuple (null-group convention shared with hll_sketch)."""
-    out_cols = [f.name for f in schema.fields]
-    group_cols = list(group_cols)
-    sorted_partials = partials.repartition(*group_cols).sortWithinPartitions(
-        *group_cols
-    )
-
-    def stream(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cur: tuple | None = None
-        state = None
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            kcols = [pdf[k] for k in group_cols]
-            change = _null_safe_change_mask(kcols)
-            starts = np.flatnonzero(change)
-            ends = np.append(starts[1:], len(pdf))
-            ctx = prepare(pdf)
-            done = []
-            for j in range(len(starts)):
-                key = _key_tuple(kcols, int(starts[j]))
-                if cur is not None and key != cur:
-                    done.append(finish(cur, state))
-                    state = None
-                cur = key
-                state = fold(state, ctx, int(starts[j]), int(ends[j]))
-            if done:
-                yield pd.DataFrame(done, columns=out_cols)
-        if cur is not None:
-            yield pd.DataFrame([finish(cur, state)], columns=out_cols)
-
-    return sorted_partials.mapInPandas(stream, schema=schema)
-
-
-def _stream_keyed_merge(
-    partials: DataFrame,
-    group_cols: Sequence[str],
-    *,
-    n_emit: int,
-    schema: StructType,
-    config: HLLConfig,
-    pack: bool,
-    keep_sketch: bool,
-    estimate: bool,
+def _hashed_values(
+    df: DataFrame, value_col: str, keys: list[str], hash_method: str
 ) -> DataFrame:
-    """Keyed register-blob merge as a batched stream — one python call
-    per Arrow batch instead of one applyInPandas call per group (r4;
-    measured 8.6x on the companion twin at 200k groups). Per-run
-    register maxima reduce VECTORIZED via np.maximum.reduceat over the
-    stacked blob matrix, so per-key python work is one tuple append.
-    ``n_emit`` keeps only the first n group columns in the output (the
-    tree-fanin intermediate groups on keys + partition salt but emits
-    keys only)."""
-
-    def prepare(pdf):
-        stacked = np.frombuffer(
-            b"".join(pdf[_SKETCH_COL].tolist()), dtype=np.uint8
-        ).reshape(len(pdf), config.m)
-        return stacked, pdf[_ROWS_COL].to_numpy()
-
-    def fold(state, ctx, start, end):
-        stacked, rseen = ctx
-        seg = np.maximum.reduce(stacked[start:end])
-        rows = int(rseen[start:end].sum())
-        if state is None:
-            return seg.copy(), rows
-        acc, rows_acc = state
-        np.maximum(acc, seg, out=acc)
-        return acc, rows_acc + rows
-
-    def finish(key, state):
-        acc, rows_acc = state
-        row = list(key[:n_emit])
-        if keep_sketch:
-            if pack:
-                s = HLL(config, explicit_threshold=0, sparse_on=False)
-                s._regs = acc
-                row.append(s.to_bytes())
-            else:
-                row.append(acc.tobytes())
-        if estimate:
-            row.append(estimate_from_registers(acc, config))
-        row.append(rows_acc)
-        return tuple(row)
-
-    return keyed_carry_stream(
-        partials, group_cols, schema, prepare=prepare, fold=fold, finish=finish
-    )
-
-
-def _make_merge_fn(
-    keys: Sequence[str],
-    config: HLLConfig,
-    *,
-    estimate: bool,
-    keep_sketch: bool,
-    pack: bool,
-):
-    """applyInPandas function: max-reduce raw register blobs per group."""
-
-    def fn(pdf: pd.DataFrame) -> pd.DataFrame:
-        stacked = np.frombuffer(
-            b"".join(pdf[_SKETCH_COL].tolist()), dtype=np.uint8
-        ).reshape(len(pdf), config.m)
-        merged = np.maximum.reduce(stacked)
-        out = {k: [pdf[k].iloc[0]] for k in keys}
-        if keep_sketch:
-            if pack:
-                s = HLL(config, explicit_threshold=0, sparse_on=False)
-                s._regs = merged
-                out[_SKETCH_COL] = [s.to_bytes()]
-            else:
-                out[_SKETCH_COL] = [merged.tobytes()]
-        if estimate:
-            out["ndv"] = [estimate_from_registers(merged, config)]
-        out[_ROWS_COL] = [int(pdf[_ROWS_COL].sum())]
-        return pd.DataFrame(out)
-
-    return fn
-
-
-def _merge_schema(
-    df: DataFrame,
-    keys: Sequence[str],
-    *,
-    estimate: bool,
-    keep_sketch: bool,
-) -> StructType:
-    fields = [df.schema[k] for k in keys]
-    if keep_sketch:
-        fields.append(StructField(_SKETCH_COL, BinaryType(), False))
-    if estimate:
-        fields.append(StructField("ndv", DoubleType(), False))
-    fields.append(StructField(_ROWS_COL, LongType(), False))
-    return StructType(fields)
+    """(keys..., ``__v``) for the sketch harness. NULL values are
+    excluded, matching countDistinct semantics (a NULL would otherwise
+    hash to a constant and count as one spurious value)."""
+    df = df.filter(F.col(value_col).isNotNull())
+    if hash_method == "xxhash64":
+        return df.select(*keys, F.xxhash64(F.col(value_col)).alias(_VAL))
+    if hash_method == "raw":
+        # filter AFTER the cast: a non-castable value (string garbage)
+        # yields a NULL hash that would otherwise crash the sketch update
+        return df.select(
+            *keys, F.col(value_col).cast("long").alias(_VAL)
+        ).filter(F.col(_VAL).isNotNull())
+    if hash_method == "murmur3":
+        # AK murmur3 convention, hashed in the Python worker
+        # (sketch_agg._hll_values): integral columns hash as their
+        # 8-byte little-endian form; strings/binary hash as UTF-8 bytes.
+        # The raw column crosses the Arrow boundary — the price of hash
+        # compatibility with externally-built AK-ecosystem sketches.
+        dtype = dict(df.dtypes)[value_col]
+        col = F.col(value_col)
+        if dtype in ("tinyint", "smallint", "int", "bigint"):
+            col = col.cast("long")
+        elif dtype not in ("string", "binary"):
+            # a float/decimal column would silently truncate through the
+            # int64 conversion (1.1 and 1.9 hash identically) — fail
+            # fast instead of estimating a wrong NDV
+            raise ValueError(
+                f"hash_method='murmur3' supports integral/string/binary "
+                f"value columns, got {dtype} — cast explicitly first"
+            )
+        return df.select(*keys, col.alias(_VAL))
+    raise ValueError(f"unknown hash method {hash_method!r}")
 
 
 def hll_sketch(
@@ -377,7 +96,6 @@ def hll_sketch(
     log2m: int = 13,
     regwidth: int = 5,
     hash_method: str = "xxhash64",
-    tree_fanin: int | None = None,
     estimate: bool = True,
     keep_sketch: bool = True,
     memory_budget_bytes: int = 256 << 20,
@@ -395,12 +113,24 @@ def hll_sketch(
     AK-ecosystem producers that hash upstream).
 
     ``engine``: 'sql' computes registers inside Catalyst (hll_sketch_sql
-    — fastest, default for xxhash64); 'python' uses the mapInPandas
-    partial harness (required for murmur3, supports tree_fanin and the
-    memory budget). Both build dense register files and produce
-    bit-identical sketches. 'explicit' builds TRUE explicit-mode
-    sketches (exact hash sets below the auto threshold — the exactness
-    tier, see hll_sketch_explicit). 'auto' picks by hash_method.
+    — fastest, default for xxhash64); 'python' runs the mapInPandas
+    sketch harness (required for murmur3, supports the memory budget).
+    Both build dense register files and produce bit-identical sketches.
+    'auto' picks by hash_method.
+
+    'explicit' builds TRUE explicit-mode sketches on the same harness:
+    each partial's EXPLICIT set holds the exact 64-bit hashes (spec
+    encoding preserves the type across the shuffle), merged per key by
+    set union. While every per-key distinct count stays under the auto
+    explicit threshold, the estimate is an exact count of distinct
+    hashes — equal to countDistinct absent a 64-bit hash collision. This
+    is the oracle tier: use it wherever a query claims exactness. (The
+    dense engines' estimates at m >> n are merely NEAR-exact — linear
+    counting lands within ±1 and can flip a floor/cast, which is why
+    exact claims must not ride on them.) State per key is bounded by the
+    explicit threshold (8 bytes x threshold before promotion); past it
+    the sketch promotes and estimates degrade gracefully to the dense
+    tier's accuracy.
 
     Float/double group keys: NaN and NULL conflate across the Arrow
     boundary (both surface as NaN in pandas), so a NaN-keyed group
@@ -413,47 +143,18 @@ def hll_sketch(
     when sketching per-key over millions of keys (the error bound is per
     sketch, and tiny groups saturate far below m registers anyway).
     """
-    config = HLLConfig(log2m, regwidth)
+    HLLConfig(log2m, regwidth)  # fail fast on an invalid shape
     keys = list(by)
 
     if engine == "auto":
         engine = "sql" if hash_method in ("xxhash64", "raw") else "python"
-    if engine == "explicit":
-        # true explicit-mode sets (the exactness tier) — see
-        # hll_sketch_explicit
-        return hll_sketch_explicit(
-            df,
-            value_col,
-            by,
-            log2m=log2m,
-            regwidth=regwidth,
-            hash_method=hash_method,
-            estimate=estimate,
-            keep_sketch=keep_sketch,
-        )
     if engine == "sql":
+        if hash_method not in ("xxhash64", "raw"):
+            raise ValueError("engine='sql' supports only xxhash64 or raw")
         if hash_method == "raw":
             # reference addRaw parity at DataFrame level: value_col
-            # already holds 64-bit hashes (e.g. from an AK-ecosystem
-            # producer); sketch them directly, no re-hash. Filter AFTER
-            # the cast: a non-castable value (string garbage) yields a
-            # NULL hash that would otherwise crash register assembly
-            # with an opaque numpy IndexError
-            return hll_sketch_sql(
-                df.select(
-                    *keys, F.col(value_col).cast("long").alias(value_col)
-                ).filter(F.col(value_col).isNotNull()),
-                value_col,
-                by,
-                log2m=log2m,
-                regwidth=regwidth,
-                estimate=estimate,
-                keep_sketch=keep_sketch,
-                _prehashed=True,
-                _count_rows=_count_rows,
-            )
-        if hash_method != "xxhash64":
-            raise ValueError("engine='sql' supports only xxhash64 or raw")
+            # already holds 64-bit hashes; sketch them directly, no re-hash
+            df, value_col = _hashed_values(df, value_col, keys, "raw"), _VAL
         return hll_sketch_sql(
             df,
             value_col,
@@ -462,249 +163,29 @@ def hll_sketch(
             regwidth=regwidth,
             estimate=estimate,
             keep_sketch=keep_sketch,
+            _prehashed=hash_method == "raw",
             _count_rows=_count_rows,
         )
 
-    # NULL values are excluded, matching countDistinct semantics (a NULL
-    # would otherwise hash to a constant and count as one spurious value)
-    df = df.filter(F.col(value_col).isNotNull())
-
-    hash_in_python = hash_method == "murmur3"
-    if hash_in_python:
-        # AK murmur3 convention, vectorized in the Python worker: integral
-        # columns hash as their 8-byte little-endian form; strings/binary
-        # hash as UTF-8 bytes (murmur3_64_bytes, pyarrow-backed). The raw
-        # column crosses the Arrow boundary — the price of hash
-        # compatibility with externally-built AK-ecosystem sketches.
-        dtype = dict(df.dtypes)[value_col]
-        col = F.col(value_col)
-        if dtype in ("tinyint", "smallint", "int", "bigint"):
-            col = col.cast("long")
-        elif dtype not in ("string", "binary"):
-            # the AK convention hashes 8-byte ints or UTF-8 bytes; a
-            # float/decimal column would silently truncate through the
-            # int64 conversion (1.1 and 1.9 hash identically) — fail
-            # fast instead of estimating a wrong NDV
-            raise ValueError(
-                f"hash_method='murmur3' supports integral/string/binary "
-                f"value columns, got {dtype} — cast explicitly first"
-            )
-        hashed = df.select(*keys, col.alias(_HASH_COL))
-    elif hash_method == "raw":
-        # filter after the cast: non-castable values yield NULL hashes
-        hashed = df.select(
-            *keys, F.col(value_col).cast("long").alias(_HASH_COL)
-        ).filter(F.col(_HASH_COL).isNotNull())
-    else:
-        hashed = df.select(*keys, _hash_column(value_col, hash_method).alias(_HASH_COL))
-
-    key_fields = [hashed.schema[k] for k in keys]
-    partials = hashed.mapInPandas(
-        _make_partial_fn(keys, config, hash_in_python, memory_budget_bytes),
-        schema=_partial_schema(key_fields),
+    params = {"log2m": log2m, "regwidth": regwidth, "hash_method": hash_method}
+    if engine != "explicit":
+        # dense register files, byte-identical to engine='sql'
+        params.update(explicit_threshold=0, sparse_on=False)
+    out = aggregate_sketches(
+        _hashed_values(df, value_col, keys, hash_method),
+        keys,
+        kind="hll",
+        params=params,
+        finalize=_ndv if estimate else None,
+        finalize_schema=_NDV_FIELDS if estimate else None,
+        memory_budget_bytes=memory_budget_bytes,
     )
-    if not keys:
-        partials = partials.unionByName(
-            _zero_partial_seed(df.sparkSession, config, _partial_schema([]))
-        )
-
-    if tree_fanin is None:
-        # one intermediate merge level bounds the final task's fan-in when
-        # the job has many input partitions (100 TB => ~10^5 partitions).
-        # The partial count equals hashed's partition count — NOT
-        # defaultParallelism (cores), which on a small cluster reading a
-        # many-split table would leave the guard off in exactly the case
-        # it exists for. The one-time plan analysis per sketch call is
-        # the price of getting the bound right; callers on a hot path
-        # can pass tree_fanin explicitly to skip it.
-        n_parts = hashed.rdd.getNumPartitions()
-        tree_fanin = 64 if n_parts > 256 else 0
-
-    if tree_fanin:
-        salted = partials.withColumn(
-            _PID_COL, F.pmod(F.col(_PID_COL), F.lit(tree_fanin))
-        )
-        inter_schema = StructType(
-            key_fields
-            + [
-                StructField(_SKETCH_COL, BinaryType(), False),
-                StructField(_ROWS_COL, LongType(), False),
-            ]
-        )
-        partials = _stream_keyed_merge(
-            salted,
-            keys + [_PID_COL],
-            n_emit=len(keys),
-            schema=inter_schema,
-            config=config,
-            pack=False,
-            keep_sketch=True,
-            estimate=False,
-        )
-
-    schema = _merge_schema(
-        hashed, keys, estimate=estimate, keep_sketch=keep_sketch
+    return out.select(
+        *keys,
+        *([_SKETCH_COL] if keep_sketch else []),
+        *(["ndv"] if estimate else []),
+        _ROWS_COL,
     )
-    if keys:
-        return _stream_keyed_merge(
-            partials,
-            keys,
-            n_emit=len(keys),
-            schema=schema,
-            config=config,
-            pack=True,
-            keep_sketch=keep_sketch,
-            estimate=estimate,
-        )
-    merge_fn = _make_merge_fn(
-        keys, config, estimate=estimate, keep_sketch=keep_sketch, pack=True
-    )
-    return partials.groupBy(F.lit(1).alias("__g")).applyInPandas(
-        lambda pdf: merge_fn(pdf), schema=schema
-    )
-
-
-def hll_sketch_explicit(
-    df: DataFrame,
-    value_col: str,
-    by: Sequence[str] = (),
-    *,
-    log2m: int = 13,
-    regwidth: int = 5,
-    hash_method: str = "xxhash64",
-    estimate: bool = True,
-    keep_sketch: bool = True,
-) -> DataFrame:
-    """TRUE explicit-mode sketching: each partial is a real :class:`HLL`
-    object whose EXPLICIT set holds the exact 64-bit hashes (spec
-    encoding preserves the type across the shuffle), merged per key by
-    set union in :func:`hll_rollup`. While every per-key distinct count
-    stays under the auto explicit threshold, the estimate is an exact
-    count of distinct hashes — equal to countDistinct absent a 64-bit
-    hash collision. This is the oracle tier: use it wherever a query
-    claims exactness. (The dense engines' estimates at m >> n are merely
-    NEAR-exact — linear counting lands within ±1 and can flip a
-    floor/cast, which is why exact claims must not ride on them.)
-
-    State per key is bounded by the explicit threshold (8 bytes x
-    threshold before promotion); past the threshold the sketch promotes
-    and estimates degrade gracefully to the dense tier's accuracy.
-    Unlike the python engine there is no memory-budget flush across
-    keys: with very high-cardinality ``by`` keys prefer the dense
-    engines (fixed bytes per key + spill-aware flushing) — the explicit
-    tier exists for exactness at modest key counts, not 100 TB group
-    fan-out."""
-    config = HLLConfig(log2m, regwidth)
-    keys = list(by)
-    df = df.filter(F.col(value_col).isNotNull())
-    if hash_method == "raw":
-        # filter after the cast: non-castable values yield NULL hashes
-        hashed = df.select(
-            *keys, F.col(value_col).cast("long").alias(_HASH_COL)
-        ).filter(F.col(_HASH_COL).isNotNull())
-        hash_in_python = False
-    elif hash_method == "murmur3":
-        dtype = dict(df.dtypes)[value_col]
-        col = F.col(value_col)
-        if dtype in ("tinyint", "smallint", "int", "bigint"):
-            col = col.cast("long")
-        elif dtype not in ("string", "binary"):
-            # the AK convention hashes 8-byte ints or UTF-8 bytes; a
-            # float/decimal column would silently truncate through the
-            # int64 conversion (1.1 and 1.9 hash identically) — fail
-            # fast instead of estimating a wrong NDV
-            raise ValueError(
-                f"hash_method='murmur3' supports integral/string/binary "
-                f"value columns, got {dtype} — cast explicitly first"
-            )
-        hashed = df.select(*keys, col.alias(_HASH_COL))
-        hash_in_python = True
-    else:
-        hashed = df.select(*keys, _hash_column(value_col, hash_method).alias(_HASH_COL))
-        hash_in_python = False
-
-    key_fields = [hashed.schema[k] for k in keys]
-    schema = StructType(
-        key_fields
-        + [
-            StructField(_SKETCH_COL, BinaryType(), False),
-            StructField(_ROWS_COL, LongType(), False),
-        ]
-    )
-
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        sk: dict[tuple, HLL] = {}
-        rows: dict[tuple, int] = {}
-        for pdf in batches:
-            if hash_in_python:
-                col = pdf[_HASH_COL]
-                if col.dtype == object or str(col.dtype).startswith("str"):
-                    h = murmur3_64_bytes(col)
-                else:
-                    h = murmur3_64_uint64(to_uint64(col.to_numpy()))
-            else:
-                h = to_uint64(pdf[_HASH_COL].to_numpy())
-            if not keys:
-                s = sk.get(())
-                if s is None:
-                    s = sk[()] = HLL(config)
-                    rows[()] = 0
-                s.add_raw64(h)
-                rows[()] += len(pdf)
-                continue
-            groups = pdf.groupby(list(keys), sort=False, dropna=False).indices
-            for gkey, idx in groups.items():
-                gk = norm_group_key(gkey)
-                s = sk.get(gk)
-                if s is None:
-                    s = sk[gk] = HLL(config)
-                    rows[gk] = 0
-                s.add_raw64(h[idx])
-                rows[gk] += len(idx)
-        if sk:
-            out = {k: [gk[i] for gk in sk] for i, k in enumerate(keys)}
-            out[_SKETCH_COL] = [s.to_bytes() for s in sk.values()]
-            out[_ROWS_COL] = [rows[gk] for gk in sk]
-            yield pd.DataFrame(out)
-
-    # materialize partials once: the rollup and the rows_seen aggregate
-    # are two consumers, and without this the full scan + hash-set build
-    # would execute twice (partials are one small row per key per
-    # partition — cheap to pin)
-    partials = hashed.mapInPandas(fn, schema=schema)
-    if not keys:
-        # empty-input seed (see _zero_partial_seed): one EMPTY spec
-        # sketch built on an executor; union identity for real inputs
-        def seed_fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            for _ in batches:
-                pass
-            yield pd.DataFrame(
-                {_SKETCH_COL: [HLL(config).to_bytes()], _ROWS_COL: [0]}
-            )
-
-        partials = partials.unionByName(
-            df.sparkSession.range(1).mapInPandas(seed_fn, schema=schema)
-        )
-    partials = partials.localCheckpoint()
-    merged = hll_rollup(partials, keys, estimate=estimate)
-    _ckpt_id = _checkpoint_rdd_id(partials)
-    if keys:
-        rows_df = partials.groupBy(*keys).agg(F.sum(_ROWS_COL).alias(_ROWS_COL))
-        out = merged.join(rows_df, eq_null_safe_cond(merged, rows_df, keys)).select(
-            *[merged[k] for k in keys],
-            *[merged[c] for c in merged.columns if c not in keys],
-            rows_df[_ROWS_COL],
-        )
-    else:
-        rows_df = partials.groupBy().agg(F.sum(_ROWS_COL).alias(_ROWS_COL))
-        out = merged.crossJoin(rows_df)
-    if not keep_sketch:
-        out = out.drop(_SKETCH_COL)
-    # advisory retirement handle (same convention as merge_sketch_tables):
-    # long-lived sessions can release the pinned partials once the result
-    # is materialized — blocks.unpersist_by_id(spark, out._retire_ckpt_id)
-    out._retire_ckpt_id = _ckpt_id
-    return out
 
 
 def hll_sketch_sql(
@@ -837,7 +318,7 @@ def hll_sketch_sql(
     # count as groupBy (hash repartition + in-partition sort); registers
     # and estimates go through the identical numpy code, so outputs stay
     # bit-identical to the per-group path (tested). Shares the carry
-    # skeleton with the register/companion/rollup merges (r4).
+    # skeleton with the sketch harness's keyed merge stage.
     def prepare(pdf):
         return (
             pdf["__idx"].to_numpy(),
@@ -880,7 +361,6 @@ def hll_ndv(
     log2m: int = 13,
     regwidth: int = 5,
     hash_method: str = "xxhash64",
-    tree_fanin: int | None = None,
     engine: str = "auto",
 ) -> DataFrame:
     """Approximate NDV(value_col) per group: (keys..., ndv double)."""
@@ -891,7 +371,6 @@ def hll_ndv(
         log2m=log2m,
         regwidth=regwidth,
         hash_method=hash_method,
-        tree_fanin=tree_fanin,
         estimate=True,
         keep_sketch=False,
         engine=engine,
@@ -959,54 +438,15 @@ def hll_rollup(
 ) -> DataFrame:
     """Re-aggregate a persisted sketch table to a coarser grain without
     touching raw data — the reference's ``union()`` at table scale
-    (src/hll.js:328-349). Input sketches are spec-encoded bytes and may
-    mix EXPLICIT/SPARSE/FULL and even shapes (auto-fold applies)."""
+    (src/hll.js:328-349), run as the merge stage of the sketch harness.
+    Input sketches are spec-encoded bytes and may mix
+    EXPLICIT/SPARSE/FULL and even shapes (auto-fold applies). Returns
+    (keys..., sketch[, ndv])."""
     keys = list(by)
-
-    def fn(pdf: pd.DataFrame) -> pd.DataFrame:
-        acc: HLL | None = None
-        for blob in pdf[sketch_col]:
-            s = HLL.from_bytes(bytes(blob))
-            acc = s if acc is None else acc.union(s)
-        out = {k: [pdf[k].iloc[0]] for k in keys}
-        out[_SKETCH_COL] = [acc.to_bytes()]
-        if estimate:
-            out["ndv"] = [acc.algorithm_cardinality()]
-        return pd.DataFrame(out)
-
-    fields = [df.schema[k] for k in keys] + [
-        StructField(_SKETCH_COL, BinaryType(), False)
-    ]
-    if estimate:
-        fields.append(StructField("ndv", DoubleType(), False))
-    if not keys:
-        return df.groupBy(*keys).applyInPandas(fn, schema=StructType(fields))
-
-    # keyed rollup: stream whole Arrow batches through one python call
-    # (hash repartition + in-partition sort, union with carry across
-    # batch boundaries) instead of one applyInPandas call per group —
-    # per-group call overhead dominates at high rollup-key cardinality.
-    # Shares the carry skeleton with the register/companion merges (r4).
-    def prepare(pdf):
-        return pdf[sketch_col].to_numpy()
-
-    def fold(acc, blobs, start, end):
-        for i in range(start, end):
-            s = HLL.from_bytes(bytes(blobs[i]))
-            acc = s if acc is None else acc.union(s)
-        return acc
-
-    def finish(key, acc):
-        row = list(key) + [acc.to_bytes()]
-        if estimate:
-            row.append(acc.algorithm_cardinality())
-        return tuple(row)
-
-    return keyed_carry_stream(
-        df.select(*keys, sketch_col),
+    return merge_sketches(
+        df.select(*keys, F.col(sketch_col).alias(_SKETCH_COL)),
         keys,
-        StructType(fields),
-        prepare=prepare,
-        fold=fold,
-        finish=finish,
+        kind="hll",
+        finalize=_ndv if estimate else None,
+        finalize_schema=_NDV_FIELDS if estimate else None,
     )

@@ -1,13 +1,33 @@
-"""Generic two-phase harness for the companion sketches (count-min, KLL,
-t-digest, Bloom) — the same partial-per-partition -> merge-sketches-only
-template as the HLL path in agg.py (SURVEY.md §2.3: all four are
-commutative-monoid merges, so they share plumbing, partition-order
-story and salting behavior).
+"""The two-phase sketch aggregation harness — one partial -> merge path
+for every mergeable sketch kind: HLL, count-min, KLL, t-digest, Bloom
+(SURVEY.md §2.3: all are commutative-monoid merges, so they share
+plumbing, partition-order story and salting behavior).
 
-Value transport:
-- hash-positional sketches (cms, bloom) consume ``F.xxhash64(col)``
+Why not a GROUPED_AGG pandas UDF straight on raw rows: that shuffles the
+*raw rows* to their groups — fatal at 10^12 rows (SURVEY.md §4.3-1).
+Instead:
+
+1. **Partial stage** (``mapInPandas``, no shuffle): every input
+   partition folds its Arrow batches into one sketch per group key,
+   flushed as output rows whenever the state outgrows its memory
+   budget. An unkeyed aggregate unions in one empty-sketch seed row, so
+   an empty input still yields one row.
+2. **Merge stage** (a shuffle of sketches only): keyed partials stream
+   through :func:`keyed_carry_stream`; unkeyed partials meet in one
+   ``applyInPandas`` group. ``rows_seen`` is carried through the same
+   fold, so no second aggregate or join is needed.
+
+Value transport — the caller projects the ``__v`` column:
+- hash-positional sketches (hll, cms, bloom) consume ``F.xxhash64(col)``
   computed JVM-side; raw values never cross into Python
+  (``hll_sketch`` may instead ship 64-bit hashes cast to long, or the
+  raw column for murmur3, which the worker hashes)
 - value sketches (kll, tdigest) consume the column cast to double
+
+Skew note: the partial stage is itself the skew mitigation — a hot key
+('en' at 60%) still produces one partial row per partition (per flush),
+so the merge shuffle is uniform in the number of partitions, never in
+the number of raw rows.
 """
 
 from __future__ import annotations
@@ -24,17 +44,129 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from ..config import HLLConfig
 from ..core.bloom import BloomFilter
 from ..core.cms import CountMinSketch
+from ..core.hll import HLL
 from ..core.kll import KLLSketch
 from ..core.tdigest import TDigest
-from ..hashing import to_uint64
+from ..hashing import murmur3_64_bytes, murmur3_64_uint64, to_uint64
 
 _VAL = "__v"
+_CNT = "__cnt"
+_SKETCH_FIELDS = [
+    StructField("sketch", BinaryType(), False),
+    StructField("rows_seen", LongType(), False),
+]
 
-# null-safe dict identity for groupby keys across Arrow batches — the
-# canonical normalizer lives beside the HLL engine's partial fns
-from .agg import norm_group_key as _norm_key  # noqa: E402
+
+# ------------------------------------------------------- null-safe keys --
+
+
+def eq_null_safe_cond(left, right, keys):
+    """Fold an eqNullSafe key-equality join condition — a plain equality
+    join silently DROPS null-keyed groups (NULL = NULL is not true in
+    join conditions), the repo's recurring null-group bug class; every
+    keyed sketch join goes through this."""
+    cond = None
+    for k in keys:
+        c = left[k].eqNullSafe(right[k])
+        cond = c if cond is None else cond & c
+    return cond
+
+
+def _null_safe_change_mask(kcols: list[pd.Series]) -> np.ndarray:
+    """Row mask marking group boundaries in key-sorted batches, treating
+    null == null. Arrow->pandas surfaces nullable numeric/timestamp keys
+    as NaN/NaT, and NaN != NaN would otherwise split a null-keyed group
+    into one group per row."""
+    n = len(kcols[0])
+    change = np.zeros(n, dtype=bool)
+    change[0] = True
+    for kc in kcols:
+        na = kc.isna().to_numpy()
+        vals = kc.to_numpy()
+        with np.errstate(invalid="ignore"):
+            neq = vals[1:] != vals[:-1]
+        neq = np.asarray(neq, dtype=bool)
+        # a pair of nulls is never a boundary; a single null always is
+        # (covers float columns where NaN != NaN already reads True and
+        # object columns where None != None reads False)
+        both_na = na[1:] & na[:-1]
+        one_na = na[1:] ^ na[:-1]
+        change[1:] |= (neq & ~both_na) | one_na
+    return change
+
+
+def _key_tuple(kcols: list[pd.Series], i: int) -> tuple:
+    """Group-key tuple at row ``i`` with NaN/NaT normalized to None so
+    tuple equality across Arrow batch boundaries is null-safe."""
+    vals = []
+    for kc in kcols:
+        v = kc.iloc[i]
+        vals.append(None if pd.isna(v) else v)
+    return tuple(vals)
+
+
+def norm_group_key(g) -> tuple:
+    """groupby().indices key as a NaN/NaT->None-normalized tuple.
+    pandas materializes a FRESH NaN object per Arrow batch, so
+    un-normalized dict lookups miss and a null-keyed group accretes one
+    accumulator per batch instead of one per partition (results stay
+    correct — the merge re-reduces — but state and shuffle inflate by
+    the batch count)."""
+    gk = g if isinstance(g, tuple) else (g,)
+    return tuple(None if pd.isna(v) else v for v in gk)
+
+
+def keyed_carry_stream(partials, group_cols, schema, *, prepare, fold, finish):
+    """The sorted-stream-with-carry skeleton behind every keyed merge
+    (the harness's merge stage and hll_sketch_sql's register assembly)
+    — ONE implementation of the subtle part: null-safe group
+    boundaries, per-segment folding, the cross-Arrow-batch carry, the
+    end-of-iterator flush. One python call per Arrow batch instead of
+    one applyInPandas call per group.
+
+    ``prepare(pdf) -> batch_ctx`` runs once per Arrow batch (vectorized
+    extraction); ``fold(state_or_None, batch_ctx, start, end) -> state``
+    folds one contiguous same-key run; ``finish(key_tuple, state) ->
+    row tuple`` emits a completed group. NaN/NaT keys surface as None
+    in the key tuple (the null-group convention of every harness)."""
+    out_cols = [f.name for f in schema.fields]
+    group_cols = list(group_cols)
+    sorted_partials = partials.repartition(*group_cols).sortWithinPartitions(
+        *group_cols
+    )
+
+    def stream(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        cur: tuple | None = None
+        state = None
+        for pdf in batches:
+            if not len(pdf):
+                continue
+            kcols = [pdf[k] for k in group_cols]
+            change = _null_safe_change_mask(kcols)
+            starts = np.flatnonzero(change)
+            ends = np.append(starts[1:], len(pdf))
+            ctx = prepare(pdf)
+            done = []
+            for j in range(len(starts)):
+                key = _key_tuple(kcols, int(starts[j]))
+                if cur is not None and key != cur:
+                    done.append(finish(cur, state))
+                    state = None
+                cur = key
+                state = fold(state, ctx, int(starts[j]), int(ends[j]))
+            if done:
+                yield pd.DataFrame(done, columns=out_cols)
+        if cur is not None:
+            yield pd.DataFrame([finish(cur, state)], columns=out_cols)
+
+    return sorted_partials.mapInPandas(stream, schema=schema)
+
+
+# ---------------------------------------------------------------- kinds --
+
 
 def _cms_update(s: CountMinSketch, v: np.ndarray, counts: np.ndarray | None = None) -> None:
     if counts is not None:
@@ -54,32 +186,242 @@ def _bloom_update(s: BloomFilter, v: np.ndarray) -> None:
     s.n_items += int(v.size - u.size)
 
 
+def _hll_values(col: pd.Series, p: dict) -> np.ndarray:
+    """64-bit hashes for HLL.add_raw64. ``hash_method='murmur3'`` (AK
+    convention, vectorized here in the worker): integral columns hash as
+    their 8-byte little-endian form, strings/binary as UTF-8 bytes.
+    Otherwise the column already holds hashes (xxhash64 or raw)."""
+    if p.get("hash_method") != "murmur3":
+        return to_uint64(col.to_numpy())
+    if col.dtype == object or str(col.dtype).startswith("str"):
+        return murmur3_64_bytes(col)
+    return murmur3_64_uint64(to_uint64(col.to_numpy()))
+
+
 _KINDS: dict[str, dict] = {
+    # explicit_threshold=0, sparse_on=False gives dense register files
+    # (hll_sketch engine='python'); the defaults give the exact
+    # EXPLICIT tier (engine='explicit')
+    "hll": {
+        "factory": lambda p: HLL(
+            HLLConfig(p.get("log2m", 13), p.get("regwidth", 5)),
+            explicit_threshold=p.get("explicit_threshold", "auto"),
+            sparse_on=p.get("sparse_on", True),
+        ),
+        "update": HLL.add_raw64,
+        "values": _hll_values,
+        "decode": HLL.from_bytes,
+        "merge": HLL.union,
+        "hashed": True,
+    },
     "cms": {
         "factory": lambda p: CountMinSketch(p.get("depth", 5), p.get("width", 2048)),
         "update": _cms_update,
         "decode": CountMinSketch.from_bytes,
+        "merge": CountMinSketch.merge,
         "hashed": True,
     },
     "bloom": {
         "factory": lambda p: BloomFilter(p.get("n_bits", 1 << 20), p.get("n_hashes", 5)),
         "update": _bloom_update,
         "decode": BloomFilter.from_bytes,
+        "merge": BloomFilter.merge,
         "hashed": True,
     },
     "kll": {
         "factory": lambda p: KLLSketch(p.get("k", 200)),
         "update": lambda s, v: s.update(v),
         "decode": KLLSketch.from_bytes,
+        "merge": KLLSketch.merge,
         "hashed": False,
     },
     "tdigest": {
         "factory": lambda p: TDigest(p.get("compression", 100.0)),
         "update": lambda s, v: s.update(v),
         "decode": TDigest.from_bytes,
+        "merge": TDigest.merge,
         "hashed": False,
     },
 }
+
+
+# -------------------------------------------------------------- harness --
+
+
+def aggregate_sketches(
+    src: DataFrame,
+    keys: Sequence[str],
+    *,
+    kind: str,
+    params: dict | None = None,
+    finalize: Callable[[object], dict] | None = None,
+    finalize_schema: list[StructField] | None = None,
+    memory_budget_bytes: int = 256 << 20,
+) -> DataFrame:
+    """Partial stage + merge stage over a projected ``src`` = (keys...,
+    ``__v``[, ``__cnt``]); ``__cnt`` weights each value (pre-aggregated
+    count-min input). Returns (keys..., sketch, rows_seen, *finalize
+    columns).
+
+    Spill-aware: partial state flushes to output rows when it exceeds
+    ``memory_budget_bytes`` (the merge stage re-reduces duplicates)."""
+    spec = _KINDS[kind]
+    params = params or {}
+    keys = list(keys)
+    update = spec["update"]
+    values = spec.get("values", lambda col, p: col.to_numpy())
+    pre_counted = _CNT in src.columns
+    partial_schema = StructType([src.schema[k] for k in keys] + _SKETCH_FIELDS)
+
+    def partial_fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        acc: dict[tuple, object] = {}
+        rows: dict[tuple, int] = {}
+        sketch_size: list[int] = []  # max serialized size observed so far
+        # Variable-size kinds (kll/tdigest, explicit hll) serialize tiny
+        # while empty (KLL 32 B empty vs ~2.5 KB populated), so a budget
+        # fed only by the at-creation sample under-counts state by
+        # 35-80x (ADVICE r3). The hard key cap therefore stays ACTIVE
+        # permanently, not just until the first flush: a flush taken
+        # while sketches are still small would otherwise re-arm the
+        # budget with a stale size and admit millions of keys that then
+        # grow under it. Each flush re-samples the max populated size,
+        # which only ever tightens the byte budget; the cap bounds what
+        # the budget cannot see. 4096 keys x the largest companion
+        # partial (~640 KB CMS) = 2.6 GB worst case, and the merge stage
+        # re-reduces duplicate key rows from extra flushes.
+        key_cap = 4096
+
+        def flush() -> pd.DataFrame:
+            out = {k: [gk[i] for gk in acc] for i, k in enumerate(keys)}
+            blobs = [s.to_bytes() for s in acc.values()]
+            if blobs:
+                sz = max(len(b) for b in blobs)
+                if not sketch_size:
+                    sketch_size.append(sz)
+                else:
+                    sketch_size[0] = max(sketch_size[0], sz)
+            out["sketch"] = blobs
+            out["rows_seen"] = [rows[gk] for gk in acc]
+            acc.clear()
+            rows.clear()
+            return pd.DataFrame(out)
+
+        for pdf in batches:
+            v = values(pdf[_VAL], params)
+            cnt = pdf[_CNT].to_numpy() if pre_counted else None
+            if not keys:
+                groups = {(): np.arange(len(pdf))}
+            else:
+                groups = {
+                    norm_group_key(g): idx
+                    for g, idx in pdf.groupby(
+                        keys, sort=False, dropna=False
+                    ).indices.items()
+                }
+            for gk, idx in groups.items():
+                s = acc.get(gk)
+                if s is None:
+                    s = acc[gk] = spec["factory"](params)
+                    rows[gk] = 0
+                    if not sketch_size:
+                        # sample NOW, not at first flush — an unsampled
+                        # budget lets 4096 full sketches accumulate
+                        # (640 KB CMS x 4096 = 2.6 GB) before any check
+                        sketch_size.append(len(s.to_bytes()))
+                if pre_counted:
+                    update(s, v[idx], cnt[idx])
+                    rows[gk] += int(cnt[idx].sum())
+                else:
+                    update(s, v[idx])
+                    rows[gk] += len(idx)
+            over_budget = (
+                sketch_size and len(acc) * sketch_size[0] > memory_budget_bytes
+            )
+            if over_budget or len(acc) >= key_cap:
+                yield flush()
+        if acc:
+            yield flush()
+
+    partials = src.mapInPandas(partial_fn, schema=partial_schema)
+    if not keys:
+        # empty-input seed, built ON AN EXECUTOR via spark.range(1):
+        # Spark never invokes Python workers on empty relations, so
+        # without it an empty/all-null input returns zero rows instead
+        # of one empty-sketch row (countDistinct returns 0, not no rows)
+        def seed_fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+            for _ in batches:
+                pass
+            yield pd.DataFrame(
+                {"sketch": [spec["factory"](params).to_bytes()], "rows_seen": [0]}
+            )
+
+        seed = src.sparkSession.range(1).mapInPandas(seed_fn, schema=partial_schema)
+        partials = partials.unionByName(seed)
+    return merge_sketches(
+        partials, keys, kind=kind, finalize=finalize, finalize_schema=finalize_schema
+    )
+
+
+def merge_sketches(
+    partials: DataFrame,
+    keys: Sequence[str],
+    *,
+    kind: str,
+    finalize: Callable[[object], dict] | None = None,
+    finalize_schema: list[StructField] | None = None,
+) -> DataFrame:
+    """Merge stage: fold ``partials`` = (keys..., sketch[, rows_seen])
+    rows of ``kind`` sketches to one row per group; rows_seen, when the
+    input carries it, is summed in the same fold. The scan order is
+    deterministic. NaN/NaT group keys are emitted as NULL. Returns
+    (keys..., sketch[, rows_seen], *finalize columns);
+    ``finalize(sketch) -> {col: value}`` runs once per merged group."""
+    spec = _KINDS[kind]
+    decode, merge = spec["decode"], spec["merge"]
+    keys = list(keys)
+    in_schema = partials.schema
+    counted = "rows_seen" in in_schema.fieldNames()
+    fin_fields = list(finalize_schema or [])
+    fin_cols = [f.name for f in fin_fields]
+    schema = StructType(
+        [in_schema[k] for k in keys]
+        + _SKETCH_FIELDS[: 2 if counted else 1]
+        + fin_fields
+    )
+
+    def prepare(pdf):
+        return pdf["sketch"].to_numpy(), (
+            pdf["rows_seen"].to_numpy() if counted else None
+        )
+
+    def fold(state, ctx, start, end):
+        blobs, rseen = ctx
+        acc, rows_acc = state if state is not None else (None, 0)
+        for i in range(start, end):
+            s = decode(bytes(blobs[i]))
+            acc = s if acc is None else merge(acc, s)
+        if counted:
+            rows_acc += int(rseen[start:end].sum())
+        return acc, rows_acc
+
+    def finish(key, state):
+        acc, rows_acc = state
+        row = [*key, acc.to_bytes(), *([rows_acc] if counted else [])]
+        if finalize is not None:
+            fin = finalize(acc)
+            row += [fin[c] for c in fin_cols]
+        return tuple(row)
+
+    if keys:
+        return keyed_carry_stream(
+            partials, keys, schema, prepare=prepare, fold=fold, finish=finish
+        )
+
+    def merge_all(pdf: pd.DataFrame) -> pd.DataFrame:
+        row = finish((), fold(None, prepare(pdf), 0, len(pdf)))
+        return pd.DataFrame([row], columns=schema.fieldNames())
+
+    return partials.groupBy().applyInPandas(merge_all, schema=schema)
 
 
 def sketch_agg(
@@ -115,12 +457,11 @@ def sketch_agg(
     # materialize as one phantom value (bloom: NULL probes report
     # member; cms: phantom heavy hitter with the null count)
     df = df.filter(F.col(value_col).isNotNull())
-    pre_counted = kind == "cms" and params.get("pre_aggregate", True)
-    if pre_counted:
+    if kind == "cms" and params.get("pre_aggregate", True):
         src = (
             df.select(*keys, F.xxhash64(F.col(value_col)).alias(_VAL))
             .groupBy(*keys, _VAL)
-            .agg(F.count(F.lit(1)).alias("__cnt"))
+            .agg(F.count(F.lit(1)).alias(_CNT))
         )
     elif spec["hashed"]:
         src = df.select(*keys, F.xxhash64(F.col(value_col)).alias(_VAL))
@@ -133,167 +474,14 @@ def sketch_agg(
             *keys, F.col(value_col).cast("double").alias(_VAL)
         ).filter(F.col(_VAL).isNotNull() & ~F.isnan(F.col(_VAL)))
 
-    key_fields = [src.schema[k] for k in keys]
-    partial_schema = StructType(
-        key_fields
-        + [
-            StructField("sketch", BinaryType(), False),
-            StructField("rows_seen", LongType(), False),
-        ]
-    )
-
-    def partial_fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        acc: dict[tuple, object] = {}
-        rows: dict[tuple, int] = {}
-        sketch_size: list[int] = []  # max serialized size observed so far
-        # Variable-size kinds (kll/tdigest) serialize tiny while empty
-        # (KLL 32 B empty vs ~2.5 KB populated), so a budget fed only by
-        # the at-creation sample under-counts state by 35-80x (ADVICE
-        # r3). The hard key cap therefore stays ACTIVE permanently, not
-        # just until the first flush: a flush taken while sketches are
-        # still small would otherwise re-arm the budget with a stale
-        # size and admit millions of keys that then grow under it. Each
-        # flush re-samples the max populated size, which only ever
-        # tightens the byte budget; the cap bounds what the budget
-        # cannot see. 4096 keys x the largest companion partial
-        # (~640 KB CMS) = 2.6 GB worst case, and the merge stage
-        # re-reduces duplicate key rows from extra flushes.
-        key_cap = 4096
-
-        def flush() -> pd.DataFrame:
-            out = {k: [gk[i] for gk in acc] for i, k in enumerate(keys)}
-            blobs = [s.to_bytes() for s in acc.values()]
-            if blobs:
-                sz = max(len(b) for b in blobs)
-                if not sketch_size:
-                    sketch_size.append(sz)
-                else:
-                    sketch_size[0] = max(sketch_size[0], sz)
-            out["sketch"] = blobs
-            out["rows_seen"] = [rows[gk] for gk in acc]
-            acc.clear()
-            rows.clear()
-            return pd.DataFrame(out)
-
-        for pdf in batches:
-            v = pdf[_VAL].to_numpy()
-            cnt = pdf["__cnt"].to_numpy() if pre_counted else None
-            if not keys:
-                groups = {(): np.arange(len(pdf))}
-            else:
-                # _norm_key: pandas materializes a FRESH NaN/NaT object per
-                # batch, so un-normalized dict lookups miss and a null-keyed
-                # group would accrete one partial per batch
-                groups = {
-                    _norm_key(g): idx
-                    for g, idx in pdf.groupby(
-                        list(keys), sort=False, dropna=False
-                    ).indices.items()
-                }
-            for gk, idx in groups.items():
-                s = acc.get(gk)
-                if s is None:
-                    s = acc[gk] = spec["factory"](params)
-                    rows[gk] = 0
-                    if not sketch_size:
-                        # sample NOW, not at first flush — an unsampled
-                        # budget lets 4096 full sketches accumulate
-                        # (640 KB CMS x 4096 = 2.6 GB) before any check
-                        sketch_size.append(len(s.to_bytes()))
-                if pre_counted:
-                    spec["update"](s, v[idx], cnt[idx])
-                    rows[gk] += int(cnt[idx].sum())
-                else:
-                    spec["update"](s, v[idx])
-                    rows[gk] += len(idx)
-            over_budget = (
-                sketch_size and len(acc) * sketch_size[0] > memory_budget_bytes
-            )
-            if over_budget or len(acc) >= key_cap:
-                yield flush()
-        if acc:
-            yield flush()
-
-    partials = src.mapInPandas(partial_fn, schema=partial_schema)
-
-    out_fields = list(key_fields) + [
-        StructField("sketch", BinaryType(), False),
-        StructField("rows_seen", LongType(), False),
-    ] + (finalize_schema or [])
-
-    def merge_fn(pdf: pd.DataFrame) -> pd.DataFrame:
-        merged = None
-        for blob in pdf["sketch"]:
-            s = spec["decode"](bytes(blob))
-            merged = s if merged is None else merged.merge(s)
-        out = {k: [pdf[k].iloc[0]] for k in keys}
-        out["sketch"] = [merged.to_bytes()]
-        out["rows_seen"] = [int(pdf["rows_seen"].sum())]
-        if finalize is not None:
-            for col, val in finalize(merged).items():
-                out[col] = [val]
-        return pd.DataFrame(out)
-
-    if keys:
-        # keyed merge: stream whole Arrow batches through one python
-        # call (hash repartition + in-partition sort, merge with carry
-        # across batch boundaries) instead of one applyInPandas call per
-        # group — per-group call overhead dominates at high key
-        # cardinality (the same fix the HLL engine's keyed assembly got
-        # in r2; the scan order is deterministic, which the old
-        # shuffle-arrival merge order was not). NaN/NaT group keys are
-        # emitted as NULL (the null-group convention shared with
-        # hll_sketch — they were already one group pandas-side).
-        from .agg import keyed_carry_stream
-
-        fin_cols = [f.name for f in (finalize_schema or [])]
-
-        def prepare(pdf):
-            return pdf["sketch"].to_numpy(), pdf["rows_seen"].to_numpy()
-
-        def fold(state, ctx, start, end):
-            blobs, rseen = ctx
-            acc, rows_acc = state if state is not None else (None, 0)
-            for i in range(start, end):
-                s = spec["decode"](bytes(blobs[i]))
-                acc = s if acc is None else acc.merge(s)
-            return acc, rows_acc + int(rseen[start:end].sum())
-
-        def finish(key, state):
-            acc, rows_acc = state
-            row = list(key) + [acc.to_bytes(), rows_acc]
-            if finalize is not None:
-                fin = finalize(acc)
-                row += [fin[c] for c in fin_cols]
-            return tuple(row)
-
-        return keyed_carry_stream(
-            partials,
-            keys,
-            StructType(out_fields),
-            prepare=prepare,
-            fold=fold,
-            finish=finish,
-        )
-
-    # empty-input seed (same contract as agg.py's _zero_partial_seed):
-    # Spark never invokes Python workers on empty relations, so without
-    # this an empty/all-null input returns zero rows instead of one
-    # empty-sketch row
-    def seed_fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for _ in batches:
-            pass
-        yield pd.DataFrame(
-            {
-                "sketch": [spec["factory"](params).to_bytes()],
-                "rows_seen": [0],
-            }
-        )
-
-    seed = df.sparkSession.range(1).mapInPandas(seed_fn, schema=partial_schema)
-    partials = partials.unionByName(seed)
-    return partials.groupBy(F.lit(1).alias("__g")).applyInPandas(
-        lambda pdf: merge_fn(pdf), schema=StructType(out_fields)
+    return aggregate_sketches(
+        src,
+        keys,
+        kind=kind,
+        params=params,
+        finalize=finalize,
+        finalize_schema=finalize_schema,
+        memory_budget_bytes=memory_budget_bytes,
     )
 
 
@@ -512,7 +700,7 @@ def _heavy_hitters_grouped(
             counters: dict[tuple, SpaceSavingCounter] = {}
             for pdf in batches:
                 for gkey, sub in pdf.groupby(keys, dropna=False, sort=False):
-                    gkey = _norm_key(gkey)
+                    gkey = norm_group_key(gkey)
                     c = counters.get(gkey)
                     if c is None:
                         c = counters[gkey] = SpaceSavingCounter(pool)
@@ -540,11 +728,7 @@ def _heavy_hitters_grouped(
         .agg(F.collect_list(F.struct("value", "__h")).alias("__cands"))
     )
     sk_sel = cms_df.select(*keys, "sketch")
-    cond = None
-    for kcol in keys:
-        c = cand_g[kcol].eqNullSafe(sk_sel[kcol])
-        cond = c if cond is None else cond & c
-    joined = cand_g.join(sk_sel, cond).select(
+    joined = cand_g.join(sk_sel, eq_null_safe_cond(cand_g, sk_sel, keys)).select(
         *[cand_g[kcol] for kcol in keys], "__cands", "sketch"
     )
     score_schema = StructType(

@@ -34,38 +34,22 @@ from ..core.hll import HLL
 from ..spark.agg import hll_sketch
 from ..spark.blocks import checkpoint_rdd_id, unpersist_by_id
 from ..spark.functions import hll_cardinality_udf
+from ..spark.sketch_agg import merge_sketches
 
 
 def merge_sketch_tables(
     current: DataFrame | None, incoming: DataFrame, keys: Sequence[str]
 ) -> DataFrame:
     """Union-merge two sketch tables on ``keys`` (full outer; sketches
-    union where both sides have rows)."""
-    from ..spark.agg import eq_null_safe_cond, hll_rollup
-    from ..spark.blocks import checkpoint_rdd_id
-
+    union and rows_seen adds where both sides have rows; a NULL key is
+    one group). One merge stage of the sketch harness — lazy, no Spark
+    job until the result is consumed."""
     if current is None:
         return incoming
     both = current.select(*keys, "sketch", "rows_seen").unionByName(
         incoming.select(*keys, "sketch", "rows_seen")
-    ).localCheckpoint()
-    # the union feeds TWO aggregates (rollup + rows_seen sum); without
-    # the checkpoint the whole upstream subtree — batch partials AND the
-    # state parquet read — executed twice per merge (the same
-    # dual-consumer shape hll_sketch_explicit checkpoints for). The
-    # checkpoint's RDD id rides on the result as ``_retire_ckpt_id`` so
-    # the caller can release the blocks once the result is materialized
-    # (js_hll_spark.spark.blocks.unpersist_by_id — both in-repo callers
-    # do; a leaked id costs one bounded sketch-table copy).
-    merged = hll_rollup(both, keys, estimate=False)
-    rows = both.groupBy(*keys).agg(F.sum("rows_seen").alias("rows_seen"))
-    out = merged.join(rows, eq_null_safe_cond(merged, rows, keys)).select(
-        *[merged[k] for k in keys],
-        merged["sketch"],
-        rows["rows_seen"],
     )
-    out._retire_ckpt_id = checkpoint_rdd_id(both)
-    return out
+    return merge_sketches(both, keys, kind="hll")
 
 
 def _resolve_snapshot(state_dir: str) -> str | None:
@@ -248,7 +232,7 @@ def streaming_ndv(
         merged = merge_sketch_tables(
             current, partials, ["window_start", *keys]
         )
-        retire = [getattr(merged, "_retire_ckpt_id", None)]
+        ckpt_id = None
         if retention is not None:
             # bound state by EVENT time: drop windows older than the
             # newest window seen minus the retention horizon (one
@@ -264,10 +248,10 @@ def streaming_ndv(
             #   event-time replays/backfills keep max < now and are
             #   unaffected)
             # - keep the null-window row (events with null ts), which
-            #   merge_sketch_tables deliberately preserves via
-            #   eqNullSafe — a plain >= filter would drop it as NULL
+            #   merge_sketch_tables keeps as its own null-keyed
+            #   group — a plain >= filter would drop it as NULL
             merged = merged.localCheckpoint()
-            retire.append(checkpoint_rdd_id(merged))
+            ckpt_id = checkpoint_rdd_id(merged)
             wcol = merged.schema["window_start"].dataType
             horizon = merged.select(
                 (
@@ -336,10 +320,9 @@ def streaming_ndv(
             except OSError:
                 pass
         finally:
-            # the swap consumed the checkpoints — release them, or a
+            # the swap consumed the checkpoint — release it, or a
             # long-running stream pins one retired copy per micro-batch
-            for rid in retire:
-                unpersist_by_id(spark, rid)
+            unpersist_by_id(spark, ckpt_id)
 
     return (
         windowed.writeStream.foreachBatch(process_batch)

@@ -21,6 +21,7 @@ import pytest
 from js_hll_spark import HLL, HLLConfig
 from js_hll_spark import codec
 
+REPO_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 DATA = os.path.join(os.path.dirname(__file__), "data")
 CORPUS = "cumulative_add_cardinality_correction_regen.csv"
 
@@ -78,7 +79,7 @@ def test_reference_agrees_with_correction_corpus():
             {"cumulative": {"hex0": rows[0][2], "values": values}}
         ).encode(),
         capture_output=True,
-        cwd="/root/repo",
+        cwd=REPO_ROOT,
         timeout=120,
     )
     assert proc.returncode == 0, proc.stderr.decode()[:2000]
@@ -151,7 +152,7 @@ def test_reference_parses_promotion_corpus():
         [shutil.which("node"), "tools/js_interop.js"],
         input=json.dumps({"cases": cases}).encode(),
         capture_output=True,
-        cwd="/root/repo",
+        cwd=REPO_ROOT,
         timeout=240,
     )
     assert proc.returncode == 0, proc.stderr.decode()[:2000]

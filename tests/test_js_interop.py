@@ -10,6 +10,7 @@ from __future__ import annotations
 
 import json
 import math
+import os
 import shutil
 import subprocess
 
@@ -22,6 +23,7 @@ NODE = shutil.which("node")
 pytestmark = pytest.mark.skipif(NODE is None, reason="node not available")
 
 REF_SRC = "/root/reference/src"
+REPO_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 def rand_hashes(n, seed):
@@ -43,7 +45,7 @@ def run_reference(cases):
         [NODE, "tools/js_interop.js"],
         input=json.dumps({"cases": cases}).encode(),
         capture_output=True,
-        cwd="/root/repo",
+        cwd=REPO_ROOT,
         timeout=120,
     )
     assert proc.returncode == 0, proc.stderr.decode()[:2000]

@@ -440,7 +440,7 @@ def test_norm_key_null_safe_across_fresh_nan_objects():
     import numpy as np
     import pandas as pd
 
-    from js_hll_spark.spark.sketch_agg import _norm_key
+    from js_hll_spark.spark.sketch_agg import norm_group_key as _norm_key
 
     a, b = float("nan"), np.float64("nan")
     assert a is not b and a != b  # fresh objects, the failure precondition

@@ -73,13 +73,6 @@ def test_engines_bit_identical(spark, events):
     assert py == sql
 
 
-def test_tree_merge_equals_flat(spark, events):
-    flat = hll_sketch(events, "user_id", log2m=11, tree_fanin=0, engine="python").first()
-    tree = hll_sketch(events, "user_id", log2m=11, tree_fanin=3, engine="python").first()
-    assert bytes(flat["sketch"]) == bytes(tree["sketch"])
-    assert flat["ndv"] == tree["ndv"]
-
-
 def test_rows_seen_accounting(spark, events):
     out = hll_sketch(events, "user_id", by=["event_type"], log2m=10).collect()
     total = sum(r["rows_seen"] for r in out)
@@ -555,15 +548,88 @@ def test_explicit_engine_null_group_keys(spark):
         [(None if i % 3 == 0 else f"g{i % 2}", i % 37) for i in range(600)],
         ["grp", "val"],
     ).repartition(7)
-    got = {
-        r["grp"]: r["ndv"]
-        for r in hll_sketch(df, "val", by=["grp"], log2m=14, engine="explicit").collect()
-    }
+    rows = hll_sketch(df, "val", by=["grp"], log2m=14, engine="explicit").collect()
+    got = {r["grp"]: r["ndv"] for r in rows}
     want = {
         r["grp"]: r["n"]
         for r in df.groupBy("grp").agg(F.countDistinct("val").alias("n")).collect()
     }
     assert got == want
+    # rows_seen is carried through the merge fold — the NULL group's
+    # count included
+    counts = {r["grp"]: r["count"] for r in df.groupBy("grp").count().collect()}
+    assert {r["grp"]: r["rows_seen"] for r in rows} == counts
+    assert None in counts
+
+
+def test_merge_sketch_tables_null_key_rows_seen(spark):
+    """merge_sketch_tables over two tables that share a NULL-keyed row:
+    the NULL group merges into one row whose sketch is the union and
+    whose rows_seen is the sum, like every other group."""
+    from js_hll_spark.streaming.ndv import merge_sketch_tables
+
+    def table(lo, hi):
+        return spark.createDataFrame(
+            [(None if i % 3 == 0 else f"g{i % 2}", i % 53) for i in range(lo, hi)],
+            ["grp", "val"],
+        )
+
+    a, b = table(0, 400), table(400, 1000)
+    merged = merge_sketch_tables(
+        hll_sketch(a, "val", by=["grp"], log2m=14, engine="explicit"),
+        hll_sketch(b, "val", by=["grp"], log2m=14, engine="explicit"),
+        ["grp"],
+    ).collect()
+    both = a.unionByName(b)
+    counts = {r["grp"]: r["count"] for r in both.groupBy("grp").count().collect()}
+    assert None in counts
+    assert {r["grp"]: r["rows_seen"] for r in merged} == counts
+    want = {
+        r["grp"]: r["n"]
+        for r in both.groupBy("grp").agg(F.countDistinct("val").alias("n")).collect()
+    }
+    got = {
+        r["grp"]: HLL.from_bytes(bytes(r["sketch"])).cardinality()
+        for r in merged
+    }
+    assert got == want
+
+
+def test_building_sketch_dataframes_runs_no_spark_job(spark, events):
+    """Building a sketch DataFrame must launch no Spark job — the
+    explicit tier and merge_sketch_tables used to checkpoint eagerly
+    (1 and 5 jobs); the python engine and sketch_agg are guards. Each
+    plan still runs when collected."""
+    from js_hll_spark.spark.sketch_agg import sketch_agg
+    from js_hll_spark.streaming.ndv import merge_sketch_tables
+
+    a = hll_sketch(events.filter(F.col("user_id") % 2 == 0), "user_id",
+                   by=["event_type"], log2m=10, engine="python")
+    b = hll_sketch(events.filter(F.col("user_id") % 2 == 1), "user_id",
+                   by=["event_type"], log2m=10, engine="python")
+    builds = {
+        "explicit-keyed": lambda: hll_sketch(
+            events, "user_id", by=["event_type"], log2m=12, engine="explicit"
+        ),
+        "explicit-global": lambda: hll_sketch(
+            events, "user_id", log2m=12, engine="explicit"
+        ),
+        "merge-sketch-tables": lambda: merge_sketch_tables(a, b, ["event_type"]),
+        "python": lambda: hll_sketch(
+            events, "user_id", by=["event_type"], log2m=12, engine="python"
+        ),
+        "kll": lambda: sketch_agg(events, "value", by=["event_type"], kind="kll"),
+    }
+    sc = spark.sparkContext
+    for name, build in builds.items():
+        group = f"lazy-build-{name}"
+        sc.setJobGroup(group, "DataFrame construction only")
+        try:
+            out = build()
+        finally:
+            sc.setJobGroup(None, None)
+        assert out.collect(), name
+        assert list(sc.statusTracker().getJobIdsForGroup(group)) == [], name
 
 
 def test_hll_hash_text_null_maps_to_null(spark):
@@ -638,27 +704,6 @@ def test_murmur3_rejects_float_columns(spark):
     for engine in ("python", "explicit"):
         with _pytest.raises(ValueError, match="integral/string/binary"):
             hll_sketch(df, "v", hash_method="murmur3", engine=engine)
-
-
-def test_keyed_tree_fanin_equals_flat(spark, events):
-    """The tree-fanin intermediate's KEYED path (group on keys + salt,
-    emit keys only) must be byte-identical to the flat keyed merge —
-    test_tree_merge_equals_flat covers only the global case."""
-    flat = {
-        r["event_type"]: (bytes(r["sketch"]), r["ndv"], r["rows_seen"])
-        for r in hll_sketch(
-            events, "user_id", by=["event_type"], log2m=11,
-            tree_fanin=0, engine="python",
-        ).collect()
-    }
-    tree = {
-        r["event_type"]: (bytes(r["sketch"]), r["ndv"], r["rows_seen"])
-        for r in hll_sketch(
-            events, "user_id", by=["event_type"], log2m=11,
-            tree_fanin=3, engine="python",
-        ).collect()
-    }
-    assert flat == tree
 
 
 def test_keyed_merge_carry_across_tiny_arrow_batches(spark, events):

@@ -20,6 +20,8 @@ CPUS = os.environ.get("SPARK_GRAFT_CPUS", "32")
 
 
 def main() -> None:
+    if len(sys.argv) < 2:
+        sys.exit("usage: python tools/dump_flagship_plans.py <suffix>")
     suffix = sys.argv[1]
     from js_hll_spark.sources.webtext import webtext_table
     from js_hll_spark.spark.agg import hll_ndv
