@@ -16,6 +16,7 @@ import numpy as np
 
 _U = np.uint64
 _MAGIC = b"CMS1"
+_TOPK_MAGIC = b"CMK1"
 
 
 def _mix(h: np.ndarray) -> np.ndarray:
@@ -111,3 +112,83 @@ class CountMinSketch:
     @property
     def relative_error(self) -> float:
         return float(np.e) / self.width
+
+
+class CountMinTopK:
+    """A count-min sketch plus a bounded candidate list for top-k
+    queries over PRE-COUNTED input: each update brings distinct values
+    with their exact counts and 64-bit hashes (each value once per
+    sketch, so the counts are exact too). The list keeps the ``pool``
+    largest counts, ties broken by ascending value. ``merge`` sums the
+    tables and unions the lists untruncated; ``top`` ranks candidates by
+    their count-min estimate, so answers keep CMS error semantics."""
+
+    __slots__ = ("cms", "pool", "values", "hashes", "counts")
+
+    def __init__(self, depth: int = 5, width: int = 2048, pool: int = 200) -> None:
+        self.cms = CountMinSketch(depth, width)
+        self.pool = pool
+        self.values = np.empty(0, dtype=object)
+        self.hashes = np.empty(0, dtype=_U)
+        self.counts = np.empty(0, dtype=np.int64)
+
+    def _extend(self, values, hashes, counts) -> None:
+        self.values = np.concatenate([self.values, values])
+        self.hashes = np.concatenate([self.hashes, hashes.astype(_U, copy=False)])
+        self.counts = np.concatenate([self.counts, counts.astype(np.int64, copy=False)])
+
+    def update(self, values: np.ndarray, hashes: np.ndarray, counts: np.ndarray) -> None:
+        self.cms.update_hashed(hashes, counts)
+        self._extend(values, hashes, counts)
+        if len(self.values) > self.pool:
+            keep = np.lexsort((self.values, -self.counts))[: self.pool]
+            self.values = self.values[keep]
+            self.hashes = self.hashes[keep]
+            self.counts = self.counts[keep]
+
+    def merge(self, other: "CountMinTopK") -> "CountMinTopK":
+        self.cms.merge(other.cms)
+        self._extend(other.values, other.hashes, other.counts)
+        return self
+
+    def top(self, k: int) -> tuple[list, list]:
+        """(values, estimates) of the k highest-estimate candidates,
+        estimate descending then value ascending."""
+        est = self.cms.query_hashed(self.hashes)
+        order = np.lexsort((self.values, -est))[:k]
+        return self.values[order].tolist(), est[order].tolist()
+
+    def to_bytes(self) -> bytes:
+        cms = self.cms.to_bytes()
+        enc = [v.encode("utf-8") for v in self.values]
+        return b"".join(
+            [
+                _TOPK_MAGIC,
+                struct.pack("<iqi", self.pool, len(cms), len(enc)),
+                cms,
+                self.hashes.astype("<u8").tobytes(),
+                self.counts.astype("<i8").tobytes(),
+                np.array([len(b) for b in enc], dtype="<i4").tobytes(),
+                *enc,
+            ]
+        )
+
+    @classmethod
+    def from_bytes(cls, data: bytes) -> "CountMinTopK":
+        if data[:4] != _TOPK_MAGIC:
+            raise ValueError("not a CMK1 blob")
+        pool, n_cms, n = struct.unpack_from("<iqi", data, 4)
+        off = 20 + n_cms
+        out = cls(pool=pool)
+        out.cms = CountMinSketch.from_bytes(data[20:off])
+        out.hashes = np.frombuffer(data, "<u8", n, off).astype(_U)
+        out.counts = np.frombuffer(data, "<i8", n, off + 8 * n).astype(np.int64)
+        lens = np.frombuffer(data, "<i4", n, off + 16 * n)
+        bounds = off + 20 * n + np.concatenate([[0], np.cumsum(lens)])
+        if bounds[-1] != len(data):
+            raise ValueError(f"truncated/oversized CMK1 blob: {len(data)} bytes")
+        out.values = np.array(
+            [data[a:b].decode("utf-8") for a, b in zip(bounds[:-1], bounds[1:])],
+            dtype=object,
+        )
+        return out

@@ -569,12 +569,16 @@ def ngram_jaccard(
         packed = lo is not None and lo >= 0 and hi < (1 << 31)
     if packed:
         n = F.size("ids")
+        # widen before shifting: a Java int shift by 32 is a no-op, so
+        # IntegerType ids would fold every pair onto x | y
         pair_longs = F.flatten(
             F.transform(
                 "ids",
                 lambda x, i: F.transform(
                     F.slice("ids", i + F.lit(2), n - i - F.lit(1)),
-                    lambda y: F.shiftleft(x, 32).bitwiseOR(y),
+                    lambda y: F.shiftleft(x.cast("long"), 32).bitwiseOR(
+                        y.cast("long")
+                    ),
                 ),
             )
         )

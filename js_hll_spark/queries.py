@@ -2128,11 +2128,12 @@ GROUP BY tok ORDER BY n DESC, tok ASC LIMIT 20
 
 def q_heavy_hitters_cms(spark, sf_dir):
     """CMS-scored heavy hitters, ORACLED: the whole pipeline is
-    deterministic (space-saving candidates over sort-before-repartition
-    partitions; integer CMS cell additions are commutative), and at
-    width 16384 the gate corpus produces zero collisions among the
-    reported top-20 — verified: est_count == exact count for every
-    reported token — so the result hash-matches the exact top-20 SQL.
+    deterministic (the candidates are the exact top-pool of one JVM
+    token count, ties by ascending token; integer CMS cell additions are
+    commutative), and at width 16384 the gate corpus produces zero
+    collisions among the reported top-20 — verified: est_count == exact
+    count for every reported token — so the result hash-matches the
+    exact top-20 SQL.
     CMS's one-sided overcount CAN appear at other corpora/widths; that
     bound (and top-set overlap under deliberate collision pressure) is
     gated in pytest, while the driver gate pins this pipeline's
@@ -2154,12 +2155,12 @@ GROUP BY tok ORDER BY est_count DESC, value ASC LIMIT 20
 
 def q_heavy_hitters_by_lang(spark, sf_dir):
     """PER-GROUP heavy hitters (top tokens per lang), ORACLED by the same
-    zero-collision argument as heavy_hitters_cms: one CMS per group, a
-    bounded space-saving candidate pass per (partition, group), and the
-    candidates join their group's sketch on the keys — no broadcast of
-    the sketch table, no global ordering; the per-group top-k is a
-    window rank. The workhorse 'top tokens per language / per domain'
-    query of a training-data pipeline."""
+    zero-collision argument as heavy_hitters_cms: one JVM count of
+    (lang, token) feeds one CMS and one exact top-pool candidate list
+    per group, and the keyed merge scores each group's candidates
+    against its own merged CMS — no join, no broadcast of the sketch
+    table, no global ordering. The workhorse 'top tokens per language /
+    per domain' query of a training-data pipeline."""
     _ship(spark)
     from .spark.sketch_agg import heavy_hitters
 

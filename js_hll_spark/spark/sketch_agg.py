@@ -23,6 +23,8 @@ Value transport — the caller projects the ``__v`` column:
   (``hll_sketch`` may instead ship 64-bit hashes cast to long, or the
   raw column for murmur3, which the worker hashes)
 - value sketches (kll, tdigest) consume the column cast to double
+- cms_topk (heavy_hitters) consumes a JVM ``groupBy(keys, value)``
+  count: the value string, its ``__cnt`` and its xxhash64 ``__h``
 
 Skew note: the partial stage is itself the skew mitigation — a hot key
 ('en' at 60%) still produces one partial row per partition (per flush),
@@ -38,15 +40,17 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 from pyspark.sql.types import (
+    ArrayType,
     BinaryType,
     LongType,
+    StringType,
     StructField,
     StructType,
 )
 
 from ..config import HLLConfig
 from ..core.bloom import BloomFilter
-from ..core.cms import CountMinSketch
+from ..core.cms import CountMinSketch, CountMinTopK
 from ..core.hll import HLL
 from ..core.kll import KLLSketch
 from ..core.tdigest import TDigest
@@ -54,6 +58,7 @@ from ..hashing import murmur3_64_bytes, murmur3_64_uint64, to_uint64
 
 _VAL = "__v"
 _CNT = "__cnt"
+_HASH = "__h"
 _SKETCH_FIELDS = [
     StructField("sketch", BinaryType(), False),
     StructField("rows_seen", LongType(), False),
@@ -61,18 +66,6 @@ _SKETCH_FIELDS = [
 
 
 # ------------------------------------------------------- null-safe keys --
-
-
-def eq_null_safe_cond(left, right, keys):
-    """Fold an eqNullSafe key-equality join condition — a plain equality
-    join silently DROPS null-keyed groups (NULL = NULL is not true in
-    join conditions), the repo's recurring null-group bug class; every
-    keyed sketch join goes through this."""
-    cond = None
-    for k in keys:
-        c = left[k].eqNullSafe(right[k])
-        cond = c if cond is None else cond & c
-    return cond
 
 
 def _null_safe_change_mask(kcols: list[pd.Series]) -> np.ndarray:
@@ -179,6 +172,13 @@ def _cms_update(s: CountMinSketch, v: np.ndarray, counts: np.ndarray | None = No
     s.update_hashed(u, c)
 
 
+def _topk_values(pdf: pd.DataFrame, p: dict) -> np.recarray:
+    """(value string, JVM xxhash64 of it) records for CountMinTopK."""
+    return np.rec.fromarrays(
+        [pdf[_VAL].to_numpy(), to_uint64(pdf[_HASH].to_numpy())], names="value,hash"
+    )
+
+
 def _bloom_update(s: BloomFilter, v: np.ndarray) -> None:
     u = np.unique(to_uint64(v))
     s.add_hashed(u)
@@ -186,11 +186,12 @@ def _bloom_update(s: BloomFilter, v: np.ndarray) -> None:
     s.n_items += int(v.size - u.size)
 
 
-def _hll_values(col: pd.Series, p: dict) -> np.ndarray:
+def _hll_values(pdf: pd.DataFrame, p: dict) -> np.ndarray:
     """64-bit hashes for HLL.add_raw64. ``hash_method='murmur3'`` (AK
     convention, vectorized here in the worker): integral columns hash as
     their 8-byte little-endian form, strings/binary as UTF-8 bytes.
     Otherwise the column already holds hashes (xxhash64 or raw)."""
+    col = pdf[_VAL]
     if p.get("hash_method") != "murmur3":
         return to_uint64(col.to_numpy())
     if col.dtype == object or str(col.dtype).startswith("str"):
@@ -220,6 +221,15 @@ _KINDS: dict[str, dict] = {
         "decode": CountMinSketch.from_bytes,
         "merge": CountMinSketch.merge,
         "hashed": True,
+    },
+    # heavy_hitters: a CMS plus the exact local top-``pool`` candidates,
+    # fed (value, hash, count) rows of a JVM groupBy count
+    "cms_topk": {
+        "factory": lambda p: CountMinTopK(p["depth"], p["width"], p["pool"]),
+        "update": lambda s, v, cnt: s.update(v.value, v.hash, cnt),
+        "values": _topk_values,
+        "decode": CountMinTopK.from_bytes,
+        "merge": CountMinTopK.merge,
     },
     "bloom": {
         "factory": lambda p: BloomFilter(p.get("n_bits", 1 << 20), p.get("n_hashes", 5)),
@@ -259,8 +269,8 @@ def aggregate_sketches(
     memory_budget_bytes: int = 256 << 20,
 ) -> DataFrame:
     """Partial stage + merge stage over a projected ``src`` = (keys...,
-    ``__v``[, ``__cnt``]); ``__cnt`` weights each value (pre-aggregated
-    count-min input). Returns (keys..., sketch, rows_seen, *finalize
+    ``__v``[, ``__cnt``][, ``__h``]); ``__cnt`` weights each value
+    (pre-aggregated count-min input). Returns (keys..., sketch, rows_seen, *finalize
     columns).
 
     Spill-aware: partial state flushes to output rows when it exceeds
@@ -269,7 +279,7 @@ def aggregate_sketches(
     params = params or {}
     keys = list(keys)
     update = spec["update"]
-    values = spec.get("values", lambda col, p: col.to_numpy())
+    values = spec.get("values", lambda pdf, p: pdf[_VAL].to_numpy())
     pre_counted = _CNT in src.columns
     partial_schema = StructType([src.schema[k] for k in keys] + _SKETCH_FIELDS)
 
@@ -307,7 +317,7 @@ def aggregate_sketches(
             return pd.DataFrame(out)
 
         for pdf in batches:
-            v = values(pdf[_VAL], params)
+            v = values(pdf, params)
             cnt = pdf[_CNT].to_numpy() if pre_counted else None
             if not keys:
                 groups = {(): np.arange(len(pdf))}
@@ -344,21 +354,23 @@ def aggregate_sketches(
 
     partials = src.mapInPandas(partial_fn, schema=partial_schema)
     if not keys:
-        # empty-input seed, built ON AN EXECUTOR via spark.range(1):
-        # Spark never invokes Python workers on empty relations, so
-        # without it an empty/all-null input returns zero rows instead
-        # of one empty-sketch row (countDistinct returns 0, not no rows)
-        def seed_fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            for _ in batches:
-                pass
-            yield pd.DataFrame(
-                {"sketch": [spec["factory"](params).to_bytes()], "rows_seen": [0]}
-            )
-
-        seed = src.sparkSession.range(1).mapInPandas(seed_fn, schema=partial_schema)
+        # empty-input seed: Spark never invokes Python workers on empty
+        # relations, so without it an empty/all-null input returns zero
+        # rows instead of one empty-sketch row (countDistinct returns 0,
+        # not no rows). It is one JVM row with a NULL sketch, which the
+        # merge folds as an empty sketch — no Python task of its own.
+        seed = src.sparkSession.range(1).select(
+            F.lit(None).cast("binary").alias("sketch"),
+            F.lit(0).cast("long").alias("rows_seen"),
+        )
         partials = partials.unionByName(seed)
     return merge_sketches(
-        partials, keys, kind=kind, finalize=finalize, finalize_schema=finalize_schema
+        partials,
+        keys,
+        kind=kind,
+        finalize=finalize,
+        finalize_schema=finalize_schema,
+        empty=lambda: spec["factory"](params),
     )
 
 
@@ -369,13 +381,15 @@ def merge_sketches(
     kind: str,
     finalize: Callable[[object], dict] | None = None,
     finalize_schema: list[StructField] | None = None,
+    empty: Callable[[], object] | None = None,
 ) -> DataFrame:
     """Merge stage: fold ``partials`` = (keys..., sketch[, rows_seen])
     rows of ``kind`` sketches to one row per group; rows_seen, when the
     input carries it, is summed in the same fold. The scan order is
     deterministic. NaN/NaT group keys are emitted as NULL. Returns
     (keys..., sketch[, rows_seen], *finalize columns);
-    ``finalize(sketch) -> {col: value}`` runs once per merged group."""
+    ``finalize(sketch) -> {col: value}`` runs once per merged group;
+    ``empty()`` builds the sketch a NULL blob stands for."""
     spec = _KINDS[kind]
     decode, merge = spec["decode"], spec["merge"]
     keys = list(keys)
@@ -398,7 +412,7 @@ def merge_sketches(
         blobs, rseen = ctx
         acc, rows_acc = state if state is not None else (None, 0)
         for i in range(start, end):
-            s = decode(bytes(blobs[i]))
+            s = empty() if blobs[i] is None else decode(bytes(blobs[i]))
             acc = s if acc is None else merge(acc, s)
         if counted:
             rows_acc += int(rseen[start:end].sum())
@@ -567,199 +581,44 @@ def heavy_hitters(
     depth: int = 5,
     width: int = 8192,
     candidate_pool: int | None = None,
-    candidates: str = "partition",
 ) -> DataFrame:
-    """Approximate top-k frequent values — per ``by`` group when given: a
-    candidate set is scored against the group's count-min sketch; top-k
-    by estimated count. Returns (keys..., value, est_count).
+    """Approximate top-k frequent values of ``col`` (cast to string;
+    NULLs not counted), per ``by`` group when given. Returns (keys...,
+    value, est_count), ordered by est_count descending then value
+    ascending within each group.
 
-    Candidate generation (``candidates``):
-    - 'partition' (default, the sketch-driven scale path): each partition
-      nominates its local top values via a bounded space-saving counter
-      per group (mapInPandas). Only pool x partitions x groups candidate
-      strings ever shuffle; a true heavy hitter is by pigeonhole a local
-      heavy hitter in at least one partition, and the CMS (not the lossy
-      local counts) produces the reported estimates. Per-partition state
-      is bounded per GROUP — with very many groups per partition prefer
-      'jvm' (or pre-partition by the group keys).
-    - 'jvm': exact two-phase HashAggregate count + per-group window
-      top-pool. The map-side partial agg collapses per-partition
-      duplicates before the shuffle, but the shuffle still carries the
-      full distinct key space — this is the exact twin for oracles/tests,
-      not the 100 TB default.
-
-    The CMS remains the persistable, mergeable frequency artifact either
-    way; its one-sided error bounds the reported counts
-    (SURVEY.md §2.2 'frequency')."""
-    from pyspark.sql.types import StringType
-
+    One pass: a two-phase JVM ``groupBy(*keys, value).count()`` gives
+    every distinct (keys, value) its exact count — the shuffle carries
+    distinct (keys, value) strings, collapsed map-side — and
+    ``xxhash64(value)`` is computed on its output. The sketch harness
+    then runs over the post-shuffle partitions, where each (keys, value)
+    appears exactly once: per group it adds each (hash, count) to the
+    count-min partial and keeps the local top-``candidate_pool`` values
+    by exact count (ties by ascending value), so the candidates are a
+    superset of each group's exact top-pool. The merge sums the CMS
+    tables, unions the candidates and reports the top-k by CMS
+    estimate: ``est_count`` carries the count-min's one-sided error
+    (never below the true count; above it by at most e/width x the
+    group's rows with probability 1 - e^-depth, SURVEY.md §2.2
+    'frequency'). Building the DataFrame runs no Spark job."""
     keys = list(by)
-    src = df.select(
-        *keys, F.col(col).cast("string").alias(_VAL)
-    ).filter(F.col(_VAL).isNotNull())
-    # r7: the candidate pass and the CMS build are two full consumers of
-    # the (typically exploded-token) input chain — materialize it once
-    # so the second pass reads blocks instead of re-running
-    # scan -> tokenize -> explode (the value stream is a narrow single
-    # column, so the checkpoint is small relative to recomputing it)
-    src = src.localCheckpoint()
     pool = candidate_pool or max(200, 10 * k)
-    if keys:
-        return _heavy_hitters_grouped(
-            src, keys, k=k, depth=depth, width=width, pool=pool,
-            candidates=candidates,
-        )
-
-    if candidates == "jvm":
-        cand = (
-            src.groupBy(_VAL)
-            .agg(F.count(F.lit(1)).alias("__n"))
-            .orderBy(F.desc("__n"), F.asc(_VAL))
-            .limit(pool)
-            .select(F.col(_VAL).alias("value"))
-        )  # global path continues below
-    else:
-
-        def candidates_fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            counter = SpaceSavingCounter(pool)
-            for pdf in batches:
-                counter.update(pdf[_VAL].value_counts())
-            top = counter.top(pool)
-            if top is not None:
-                yield pd.DataFrame({"value": top.index.astype(str)})
-
-        cand = src.mapInPandas(
-            candidates_fn, schema=StructType([StructField("value", StringType())])
-        ).distinct()
-
-    cms_df = sketch_agg(src, _VAL, kind="cms", params={"depth": depth, "width": width})
-    sketch_blob = cms_df.select("sketch")
-
-    # collapse candidates to ONE row before meeting the blob — the same
-    # blob-crosses-once shape as the grouped path; a per-candidate
-    # crossJoin would duplicate the (depth x width x 8)-byte blob onto
-    # every one of the ~pool candidate rows through the final shuffle.
-    # Candidate strings hash JVM-side so probe positions match the build.
-    cand_g = cand.withColumn("__h", F.xxhash64("value")).agg(
-        F.collect_list(F.struct("value", "__h")).alias("__cands")
+    counted = (
+        df.select(*keys, F.col(col).cast("string").alias(_VAL))
+        .filter(F.col(_VAL).isNotNull())
+        .groupBy(*keys, _VAL)
+        .agg(F.count(F.lit(1)).alias(_CNT))
+        .withColumn(_HASH, F.xxhash64(_VAL))
     )
-    joined = cand_g.crossJoin(sketch_blob)
-
-    def score_fn(pdf: pd.DataFrame) -> pd.DataFrame:
-        sk = CountMinSketch.from_bytes(bytes(pdf["sketch"].iloc[0]))
-        cands = pdf["__cands"].iloc[0]
-        vals = [c["value"] for c in cands]
-        hs = to_uint64(np.array([c["__h"] for c in cands], dtype=np.int64))
-        est = sk.query_hashed(hs)
-        return pd.DataFrame({"value": vals, "est_count": est})
-
-    scored = joined.groupBy(F.lit(1).alias("__g")).applyInPandas(
-        score_fn,
-        schema=StructType(
-            [StructField("value", StringType()), StructField("est_count", LongType())]
-        ),
-    )
-    return scored.orderBy(F.desc("est_count"), F.asc("value")).limit(k)
-
-
-def _heavy_hitters_grouped(
-    src: DataFrame,
-    keys: list[str],
-    *,
-    k: int,
-    depth: int,
-    width: int,
-    pool: int,
-    candidates: str,
-) -> DataFrame:
-    """Per-group heavy hitters: one CMS per group (sketch_agg ``by``),
-    per-group candidate nomination, candidates join their group's sketch
-    on the keys (co-partitioned equi-join, no broadcast of all sketches),
-    and a per-group window top-k. src = (keys..., _VAL string)."""
-    from pyspark.sql.types import StringType
-    from pyspark.sql.window import Window
-
-    key_fields = [src.schema[kcol] for kcol in keys]
-    if candidates == "jvm":
-        w_pool = Window.partitionBy(*keys).orderBy(F.desc("__n"), F.asc(_VAL))
-        cand = (
-            src.groupBy(*keys, _VAL)
-            .agg(F.count(F.lit(1)).alias("__n"))
-            .withColumn("__rn", F.row_number().over(w_pool))
-            .filter(F.col("__rn") <= pool)
-            .select(*keys, F.col(_VAL).alias("value"))
-        )
-    else:
-        cand_schema = StructType(
-            key_fields + [StructField("value", StringType())]
-        )
-
-        def candidates_fn(
-            batches: Iterator[pd.DataFrame],
-        ) -> Iterator[pd.DataFrame]:
-            counters: dict[tuple, SpaceSavingCounter] = {}
-            for pdf in batches:
-                for gkey, sub in pdf.groupby(keys, dropna=False, sort=False):
-                    gkey = norm_group_key(gkey)
-                    c = counters.get(gkey)
-                    if c is None:
-                        c = counters[gkey] = SpaceSavingCounter(pool)
-                    c.update(sub[_VAL].value_counts())
-            rows = []
-            for gkey, c in counters.items():
-                top = c.top(pool)
-                if top is not None:
-                    rows.extend(tuple(gkey) + (str(v),) for v in top.index)
-            if rows:
-                yield pd.DataFrame(rows, columns=[*keys, "value"])
-
-        cand = src.mapInPandas(candidates_fn, schema=cand_schema).distinct()
-
-    cms_df = sketch_agg(
-        src, _VAL, keys, kind="cms", params={"depth": depth, "width": width}
-    )
-    # one candidates-row per group joins one sketch-row per group, so
-    # each group's CMS blob crosses the shuffle ONCE (a per-candidate
-    # equi-join duplicated the ~blob x candidates payload); eqNullSafe
-    # keeps a null-keyed group, which a plain key join silently drops
-    cand_g = (
-        cand.withColumn("__h", F.xxhash64("value"))
-        .groupBy(*keys)
-        .agg(F.collect_list(F.struct("value", "__h")).alias("__cands"))
-    )
-    sk_sel = cms_df.select(*keys, "sketch")
-    joined = cand_g.join(sk_sel, eq_null_safe_cond(cand_g, sk_sel, keys)).select(
-        *[cand_g[kcol] for kcol in keys], "__cands", "sketch"
-    )
-    score_schema = StructType(
-        key_fields
-        + [
-            StructField("value", StringType()),
-            StructField("est_count", LongType()),
-        ]
-    )
-
-    def score_stream(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            for i in range(len(pdf)):
-                sk = CountMinSketch.from_bytes(bytes(pdf["sketch"].iloc[i]))
-                cands = pdf["__cands"].iloc[i]
-                vals = [c["value"] for c in cands]
-                hs = to_uint64(
-                    np.array([c["__h"] for c in cands], dtype=np.int64)
-                )
-                est = sk.query_hashed(hs)
-                out = {
-                    kcol: [pdf[kcol].iloc[i]] * len(vals) for kcol in keys
-                }
-                out["value"] = vals
-                out["est_count"] = est
-                yield pd.DataFrame(out)
-
-    scored = joined.mapInPandas(score_stream, schema=score_schema)
-    w = Window.partitionBy(*keys).orderBy(F.desc("est_count"), F.asc("value"))
-    return (
-        scored.withColumn("__rn", F.row_number().over(w))
-        .filter(F.col("__rn") <= k)
-        .select(*keys, "value", "est_count")
-    )
+    top = aggregate_sketches(
+        counted,
+        keys,
+        kind="cms_topk",
+        params={"depth": depth, "width": width, "pool": pool},
+        finalize=lambda s: dict(zip(("value", "est_count"), s.top(k))),
+        finalize_schema=[
+            StructField("value", ArrayType(StringType())),
+            StructField("est_count", ArrayType(LongType())),
+        ],
+    ).select(*keys, F.inline(F.arrays_zip("value", "est_count")))
+    return top if keys else top.orderBy(F.desc("est_count"), F.asc("value")).limit(k)

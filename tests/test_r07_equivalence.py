@@ -113,6 +113,27 @@ def test_ngram_packed_and_struct_paths_agree(spark, documents):
     assert len(packed) > 0  # the corpus must actually exercise the path
 
 
+def test_ngram_jaccard_int_ids_match_bigint(spark):
+    """IntegerType ids take the packed-long path too, so packing must
+    widen them to long first: a Java int shift by 32 is a no-op, which
+    folded every pair onto one key (a self-pair with jaccard 1.5). Int
+    ids must give the rows of the same frame with bigint ids."""
+    from js_hll_spark.operators import dedup
+
+    text = [
+        (1, "a b c d e"),
+        (2, "a b c d f"),
+        (3, "a b x y z"),
+        (4, "q r s t u"),
+        (5, "q r s t v"),
+    ]
+    ints = spark.createDataFrame(text, "doc_id int, text string")
+    longs = ints.withColumn("doc_id", F.col("doc_id").cast("long"))
+    got = _rows(dedup.ngram_jaccard(ints, shingle_n=3))
+    assert got == _rows(dedup.ngram_jaccard(longs, shingle_n=3))
+    assert got and all(a < b and 0 < j <= 1 for a, b, j in got)
+
+
 def test_cosine_kernel_bit_identical_to_hof(spark):
     from js_hll_spark.operators import ann
 

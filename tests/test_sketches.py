@@ -4,6 +4,7 @@ against exact twins and Spark builtins."""
 
 from __future__ import annotations
 
+import contextlib
 import math
 
 import numpy as np
@@ -296,25 +297,17 @@ class TestSpaceSavingCounter:
         assert dict(top) == {"c": 9.0, "a": 6.0, "b": 2.0}
 
 
-def test_grouped_heavy_hitters_modes_agree(spark, documents):
-    """Per-group heavy hitters: the partition-mode space-saving candidate
-    pass and the exact jvm candidate pass must report the same top-k per
-    group (candidate recall suffices at this sizing), matching the exact
-    per-group counts."""
+def test_grouped_heavy_hitters_match_exact(spark, documents):
+    """Per-group heavy hitters over the fixture corpus report exactly
+    the per-group top-5 of the exact counts (candidate recall suffices
+    and the CMS has no collision at this sizing)."""
     from js_hll_spark.operators import text
     from js_hll_spark.spark.sketch_agg import heavy_hitters
     from pyspark.sql.window import Window
 
     toks = documents.select("lang", F.explode(text.tokens("text")).alias("tok"))
-    results = {}
-    for mode in ("partition", "jvm"):
-        hh = heavy_hitters(
-            toks, "tok", by=["lang"], k=5, width=16384, candidates=mode
-        )
-        results[mode] = {
-            (r["lang"], r["value"]): r["est_count"] for r in hh.collect()
-        }
-    assert results["partition"] == results["jvm"]
+    hh = heavy_hitters(toks, "tok", by=["lang"], k=5, width=16384)
+    got = {(r["lang"], r["value"]): r["est_count"] for r in hh.collect()}
     w = Window.partitionBy("lang").orderBy(F.desc("n"), F.asc("tok"))
     exact = {
         (r["lang"], r["tok"]): r["n"]
@@ -324,7 +317,7 @@ def test_grouped_heavy_hitters_modes_agree(spark, documents):
         .filter("rn <= 5")
         .collect()
     }
-    assert results["jvm"] == exact
+    assert got == exact
     # 5 langs x top-5
     assert len(exact) == 25
 
@@ -368,6 +361,132 @@ def test_grouped_heavy_hitters_keeps_null_group(spark):
     got = {(r["grp"], r["value"]): r["est_count"] for r in out.collect()}
     assert got[(None, "x")] == 7 and got[(None, "y")] == 3
     assert got[("g1", "a")] == 5 and got[("g1", "b")] == 2
+
+
+# -------------------------------------- heavy hitters vs the exact top-k --
+# Each case compares heavy_hitters to the exact groupBy().count() top-k
+# (count descending, then value ascending) at a width where the reported
+# values have no count-min collision, so est_count is the exact count.
+
+
+def _exact_top(df, col, keys, k):
+    counts = (
+        df.filter(F.col(col).isNotNull())
+        .groupBy(*keys, F.col(col).cast("string").alias("value"))
+        .count()
+        .collect()
+    )
+    per: dict[tuple, list] = {}
+    for r in counts:
+        per.setdefault(tuple(r[c] for c in keys), []).append((-r["count"], r["value"]))
+    return {
+        (*g, v): -c for g, cands in per.items() for c, v in sorted(cands)[:k]
+    }
+
+
+def _hh_rows(df, keys):
+    return {(*(r[c] for c in keys), r["value"]): r["est_count"] for r in df.collect()}
+
+
+@contextlib.contextmanager
+def _sql_conf(spark, conf):
+    before = {c: spark.conf.get(c) for c in conf}
+    try:
+        for c, v in conf.items():
+            spark.conf.set(c, v)
+        yield
+    finally:
+        for c, v in before.items():
+            spark.conf.set(c, v)
+
+
+def test_heavy_hitters_partition_count_invariant(spark):
+    """The same rows in 1 and in 16 input partitions give the same
+    answer, keyed and unkeyed, and it is the exact top-k."""
+    rows = [(f"g{i % 3}", f"v{(i * 7) % 41 if i % 5 else i % 4}") for i in range(3000)]
+    df = spark.createDataFrame(rows, "grp string, tok string")
+    for keys, k in (([], 10), (["grp"], 4)):
+        one = heavy_hitters(df.coalesce(1), "tok", keys, k=k, width=65536)
+        many = heavy_hitters(df.repartition(16), "tok", keys, k=k, width=65536)
+        if not keys:
+            assert one.collect() == many.collect()
+        assert _hh_rows(one, keys) == _hh_rows(many, keys)
+        assert _hh_rows(one, keys) == _exact_top(df, "tok", keys, k)
+
+
+def test_heavy_hitters_ties_at_pool_boundary(spark):
+    """Twelve values tie at the pool boundary, spread over 8 post-shuffle
+    partitions (coalescing off): every partition nominates its smallest
+    tied values, so the reported top-k breaks the tie by ascending
+    value, as the exact top-k does."""
+    rows = [("g", "hot")] * 9 + [("g", f"t{j:02d}") for j in range(12) for _ in range(4)]
+    df = spark.createDataFrame(rows, "grp string, tok string").repartition(8)
+    with _sql_conf(spark, {"spark.sql.adaptive.coalescePartitions.enabled": "false"}):
+        got = {
+            tuple(keys): _hh_rows(
+                heavy_hitters(df, "tok", keys, k=3, width=65536, candidate_pool=3),
+                keys,
+            )
+            for keys in ([], ["grp"])
+        }
+        top = heavy_hitters(df, "tok", k=3, width=65536, candidate_pool=3).collect()
+    for keys in ([], ["grp"]):
+        assert got[tuple(keys)] == _exact_top(df, "tok", keys, 3)
+    assert [(r["value"], r["est_count"]) for r in top] == [
+        ("hot", 9), ("t00", 4), ("t01", 4)
+    ]
+
+
+def test_heavy_hitters_empty_and_all_null_inputs(spark):
+    """An empty frame and an all-NULL value column give 0 rows, keyed
+    and unkeyed, like the exact top-k of nothing."""
+    empty = spark.createDataFrame([], "grp string, tok string")
+    nulls = spark.createDataFrame([("g", None)] * 5 + [(None, None)] * 3,
+                                  "grp string, tok string")
+    for df in (empty, nulls):
+        for keys in ([], ["grp"]):
+            assert heavy_hitters(df, "tok", keys, k=5).collect() == []
+
+
+def test_heavy_hitters_integer_values(spark):
+    """An IntegerType value column reports its values as strings with
+    exact counts; NULL values are not counted."""
+    rows = [(i % 2, (i * i) % 13 if i % 9 else None) for i in range(500)]
+    df = spark.createDataFrame(rows, "grp int, v int")
+    for keys in ([], ["grp"]):
+        out = heavy_hitters(df, "v", keys, k=4, width=65536)
+        assert out.schema["value"].dataType.simpleString() == "string"
+        assert _hh_rows(out, keys) == _exact_top(df, "v", keys, 4)
+
+
+def test_heavy_hitters_hot_group_beside_tiny_ones(spark):
+    """One group holding most rows and thousands of values sits beside
+    800 groups of one or two rows each: every group gets its exact
+    top-k."""
+    hot = [("hot", f"w{(i * i) % 2003}") for i in range(20000)]
+    tiny = [(f"t{g}", f"x{g % 5}") for g in range(800) for _ in range(1 + g % 2)]
+    df = spark.createDataFrame(hot + tiny, "grp string, tok string").repartition(8)
+    out = heavy_hitters(df, "tok", by=["grp"], k=3, width=65536)
+    assert _hh_rows(out, ["grp"]) == _exact_top(df, "tok", ["grp"], 3)
+
+
+def test_heavy_hitters_partial_flush_identical(spark):
+    """5000 groups in one post-shuffle partition, read in 1000-row Arrow
+    batches, pass the partial stage's 4096-key cap. The rows arrive
+    value-major (every group's first value, then every group's second),
+    so each group's values straddle flushes and its CMS table and
+    candidates are split across partial rows. The merged answer is
+    still the exact top-k."""
+    rows = [(f"g{g}", f"v{(g + j) % 7}") for j in range(3) for g in range(5000)
+            for _ in range(j + 1)]
+    df = spark.createDataFrame(rows, "grp string, tok string")
+    conf = {"spark.sql.shuffle.partitions": "1",
+            "spark.sql.execution.arrow.maxRecordsPerBatch": "1000"}
+    with _sql_conf(spark, conf):
+        out = heavy_hitters(df, "tok", by=["grp"], k=2, depth=4, width=128,
+                            candidate_pool=2)
+        got = _hh_rows(out, ["grp"])
+    assert got == _exact_top(df, "tok", ["grp"], 2)
 
 
 def test_companion_from_bytes_rejects_truncation():

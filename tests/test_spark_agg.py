@@ -595,18 +595,19 @@ def test_merge_sketch_tables_null_key_rows_seen(spark):
     assert got == want
 
 
-def test_building_sketch_dataframes_runs_no_spark_job(spark, events):
+def test_building_sketch_dataframes_runs_no_spark_job(spark, events, documents):
     """Building a sketch DataFrame must launch no Spark job — the
-    explicit tier and merge_sketch_tables used to checkpoint eagerly
-    (1 and 5 jobs); the python engine and sketch_agg are guards. Each
-    plan still runs when collected."""
-    from js_hll_spark.spark.sketch_agg import sketch_agg
+    explicit tier, merge_sketch_tables and heavy_hitters used to
+    checkpoint eagerly (1, 5 and 1 jobs); the python engine and
+    sketch_agg are guards. Each plan still runs when collected."""
+    from js_hll_spark.spark.sketch_agg import heavy_hitters, sketch_agg
     from js_hll_spark.streaming.ndv import merge_sketch_tables
 
     a = hll_sketch(events.filter(F.col("user_id") % 2 == 0), "user_id",
                    by=["event_type"], log2m=10, engine="python")
     b = hll_sketch(events.filter(F.col("user_id") % 2 == 1), "user_id",
                    by=["event_type"], log2m=10, engine="python")
+    tokens = documents.select("lang", F.explode(F.split("text", " ")).alias("tok"))
     builds = {
         "explicit-keyed": lambda: hll_sketch(
             events, "user_id", by=["event_type"], log2m=12, engine="explicit"
@@ -619,6 +620,10 @@ def test_building_sketch_dataframes_runs_no_spark_job(spark, events):
             events, "user_id", by=["event_type"], log2m=12, engine="python"
         ),
         "kll": lambda: sketch_agg(events, "value", by=["event_type"], kind="kll"),
+        "heavy-hitters": lambda: heavy_hitters(tokens, "tok", k=10),
+        "heavy-hitters-keyed": lambda: heavy_hitters(
+            tokens, "tok", by=["lang"], k=5
+        ),
     }
     sc = spark.sparkContext
     for name, build in builds.items():

@@ -23,11 +23,6 @@ from pyspark.sql import SparkSession, functions as F
 # both produce bit-identical sketches; see BENCH/BASELINE.md for why both
 # are measured
 ENGINE = os.environ.get("SCALING_ENGINE", "auto")
-# heavy-hitter candidate mode: 'jvm' (exact two-phase agg) keeps the
-# protocol's wall-clock tractable at local[2] — the default 'partition'
-# mode ships every token through Arrow, which is bounded-memory at scale
-# but ~10x wall at 2 cores for 3 timed reps over ~500M tokens
-HH_MODE = os.environ.get("SCALING_HH_MODE", "jvm")
 
 
 def main(input_path: str, cores: int) -> None:
@@ -85,7 +80,6 @@ def main(input_path: str, cores: int) -> None:
             "tok",
             k=20,
             width=16384,
-            candidates=HH_MODE,
         ).collect()
 
     # one untimed warm-up per phase on a small slice: JIT + python-worker
@@ -98,7 +92,7 @@ def main(input_path: str, cores: int) -> None:
                by=["lang", "day"], log2m=13, engine=ENGINE).collect()
     heavy_hitters(
         warm.select(F.explode(F.split(F.lower("text"), " ")).alias("tok")),
-        "tok", k=20, width=16384, candidates=HH_MODE).collect()
+        "tok", k=20, width=16384).collect()
     warm.unpersist()
 
     def median3(fn):
@@ -129,7 +123,6 @@ def main(input_path: str, cores: int) -> None:
                 "docs_per_sec_ndv": round(n_rows * R_NDV / t_ndv, 1),
                 "replication": {"ndv": R_NDV, "grouped": R_GROUPED},
                 "engine": ENGINE,
-                "hh_mode": HH_MODE,
             }
         )
     )
