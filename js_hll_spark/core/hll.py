@@ -71,12 +71,22 @@ _NEG_POW2 = np.exp2(-np.arange(256, dtype=np.float64))
 
 def estimate_from_registers(regs: np.ndarray, config: HLLConfig) -> float:
     """Flajolet estimator with small/large-range corrections
-    (src/hll.js:276-299). Returns NaN when the large-range log argument is
-    negative (JS Math.log semantics; the reference test maps this case to
-    NaN, test/hll-test.js:458-480) and +inf when it is exactly zero.
+    (src/hll.js:276-299) over a FULL register file; see
+    :func:`estimate_from_counts`."""
+    return estimate_from_counts(
+        np.bincount(regs, minlength=config.max_register_value + 1), config
+    )
+
+
+def estimate_from_counts(counts: np.ndarray, config: HLLConfig) -> float:
+    """The estimator and its correction ladder over the register-value
+    histogram (``counts[r]`` = registers holding r; ``counts[0]`` = zero
+    registers) — the one body behind every representation. Returns NaN
+    when the large-range log argument is negative (JS Math.log
+    semantics; the reference test maps this case to NaN,
+    test/hll-test.js:458-480) and +inf when it is exactly zero.
     """
     m = config.m
-    counts = np.bincount(regs, minlength=config.max_register_value + 1)
     zeroes = int(counts[0])
     # sum(2**-M[j]) grouped by register value: each term count*2**-r is an
     # exact float64 product, so this matches index-order summation to <1ulp.
@@ -476,27 +486,13 @@ class HLL:
             return float(len(self._explicit))
         if self._sparse is not None:
             cfg = self.config
-            m = cfg.m
-            occupied = len(self._sparse)
-            zeroes = m - occupied
-            indicator = float(zeroes) + float(
-                np.exp2(
-                    -np.fromiter(self._sparse.values(), dtype=np.float64)
-                ).sum()
-                if occupied
-                else 0.0
+            counts = np.bincount(
+                np.fromiter(self._sparse.values(), dtype=np.int64),
+                minlength=cfg.max_register_value + 1,
             )
-            estimator = cfg.alpha_m_squared / indicator
-            if zeroes != 0 and estimator < cfg.small_estimator_cutoff:
-                return m * math.log(m / zeroes)
-            if estimator <= cfg.large_estimator_cutoff:
-                return estimator
-            x = 1.0 - estimator / cfg.two_to_l
-            if x < 0.0:
-                return float("nan")
-            if x == 0.0:
-                return float("inf")
-            return -cfg.two_to_l * math.log(x)
+            # SPARSE holds only the non-zero registers
+            counts[0] = cfg.m - len(self._sparse)
+            return estimate_from_counts(counts, cfg)
         return estimate_from_registers(self._regs, self.config)
 
     def cardinality(self) -> int | float:

@@ -276,18 +276,16 @@ def _pair_structs(ids_col: str = "ids"):
     )
 
 
-def _lsh_band_join(
-    sig: DataFrame, band_cols: list, *, materialize: bool = True
-) -> DataFrame:
+def _lsh_band_join(sig: DataFrame, band_cols: list) -> DataFrame:
     """Band-bucket candidate pairs shared by both MinHash tiers — r7
     rewrite: ONE groupBy over (band_idx, band_hash) collects each
     bucket's sorted member list and codegen explodes the i<j pairs,
     replacing the banded self-equi-join (which shuffled the banded table
     twice, built a hash relation over it, and needed the signature table
     checkpointed so both sides could share blocks). The signature chain
-    is consumed exactly once now, so ``materialize`` is a no-op kept for
-    API compatibility; bucket membership lists are bounded by the dup
-    cluster size per band — the same candidate volume the join carried."""
+    is consumed exactly once, so nothing is materialized; bucket
+    membership lists are bounded by the dup cluster size per band — the
+    same candidate volume the join carried."""
     banded = sig.select(
         "__id", F.posexplode(F.array(*band_cols)).alias("band_idx", "band_hash")
     )
@@ -311,13 +309,11 @@ def minhash_lsh_candidates_fast(
     bands: int = 4,
     shingle_n: int = 3,
     postings: DataFrame | None = None,
-    materialize: bool = True,
 ) -> DataFrame:
     """minhash_lsh_candidates with the xxhash64 signature — the 100 TB
     path. Same plan shape: explode shingles -> k map-side min-aggs ->
     band equi-join. Pass ``postings`` (from ``shingle_postings``) to
-    reuse a materialized posting table across composed tiers;
-    ``materialize=False`` keeps everything lazy."""
+    reuse a materialized posting table across composed tiers."""
     if df is None and postings is None:
         raise ValueError(
             "pass df (raw documents) or postings (a shingle_postings "
@@ -340,7 +336,7 @@ def minhash_lsh_candidates_fast(
         )
         for b in range(bands)
     ]
-    return _lsh_band_join(sig, band_cols, materialize=materialize)
+    return _lsh_band_join(sig, band_cols)
 
 
 def minhash_lsh_candidates(
@@ -352,7 +348,6 @@ def minhash_lsh_candidates(
     bands: int = 4,
     shingle_n: int = 3,
     postings: DataFrame | None = None,
-    materialize: bool = True,
 ) -> DataFrame:
     """Candidate near-duplicate pairs: docs sharing at least one LSH band
     (rows of k/bands minhashes). Returns (id_a, id_b) with id_a < id_b.
@@ -361,8 +356,7 @@ def minhash_lsh_candidates(
     self-equi-join on (band_idx, band_hash) -> distinct pairs. The join key
     is a hash, so it is skew-free; candidates are orders of magnitude fewer
     than n^2. Pass ``postings`` (from ``shingle_postings``) to reuse a
-    materialized posting table across composed tiers; ``materialize=False``
-    keeps everything lazy."""
+    materialized posting table across composed tiers."""
     if df is None and postings is None:
         raise ValueError(
             "pass df (raw documents) or postings (a shingle_postings "
@@ -397,7 +391,7 @@ def minhash_lsh_candidates(
         )
         for b in range(bands)
     ]
-    return _lsh_band_join(sig, band_cols, materialize=materialize)
+    return _lsh_band_join(sig, band_cols)
 
 
 def ngram_jaccard(

@@ -1242,8 +1242,9 @@ def q_hll_ndv_by_lang(spark, sf_dir):
 def q_hll_ndv_murmur3(spark, sf_dir):
     """AK hashing convention driver-visible: murmur3 x64-128 (the
     reference ecosystem's hash, js-murmur3-128) over the string column,
-    vectorized in the worker — rows-only (approximate); bit-parity of
-    the hash itself is pinned against golden vectors in pytest."""
+    vectorized in the worker, so hll_ndv runs the mapInPandas sketch
+    harness's dense mode — rows-only (approximate); bit-parity of the
+    hash itself is pinned against golden vectors in pytest."""
     _ship(spark)
     return hll_ndv(
         _t(spark, sf_dir, "documents"),
@@ -1348,13 +1349,14 @@ GROUP BY lang
 def q_hll_ndv_murmur3_bound(spark, sf_dir):
     """The murmur3 (AK-convention) estimate family under the same
     driver-witnessed accuracy contract as q_hll_ndv_bound_check: the
-    python-engine murmur3 pipeline (worker-side vectorized hash —
-    byte-compatible with AK-ecosystem producers) estimates per-lang NDV
-    at log2m=12, and the realized relative error against the DuckDB
-    exact count must sit inside 3 x 1.04/sqrt(4096). Deterministic
-    (fixed hash family, merge-order-independent), measured margin
-    >= 2.5x at every gate SF. Both estimate engines the library ships
-    now leave a per-round accuracy record in CORRECTNESS."""
+    murmur3 pipeline on the sketch harness's dense mode (worker-side
+    vectorized hash — byte-compatible with AK-ecosystem producers)
+    estimates per-lang NDV at log2m=12, and the realized relative error
+    against the DuckDB exact count must sit inside 3 x 1.04/sqrt(4096).
+    Deterministic (fixed hash family, merge-order-independent), measured
+    margin >= 2.5x at every gate SF. Both dense register paths the
+    library ships now leave a per-round accuracy record in
+    CORRECTNESS."""
     _ship(spark)
     from .config import HLLConfig
 

@@ -1,26 +1,25 @@
-"""Mergeable HLL aggregation over DataFrames — the two-phase harness.
+"""Mergeable HLL aggregation over DataFrames — one dense register path
+per hash.
 
 Why not a GROUPED_AGG pandas UDF straight on raw rows: that shuffles the
 *raw rows* to their groups — fatal at 10^12 rows (SURVEY.md §4.3-1).
-Instead:
+Instead every path hashes once, JVM-side where it can
+(:func:`_hashed_values`: ``F.xxhash64``, a raw long, or the raw column
+for murmur3; Catalyst prunes the scan down to (keys, value)), then
+reduces each partition before the only shuffle of sketch state:
 
-1. **Hash JVM-side**: ``F.xxhash64`` (or a murmur column) inside
-   whole-stage codegen; Catalyst prunes the scan down to (keys, value).
-2. **Partial stage** (``mapInPandas``, no shuffle): every input partition
-   reduces to one sketch per group key via numpy register updates over
-   Arrow batches. Output: one row per (partition, key).
-3. **Final merge + estimate** (after a shuffle of sketches only): union
-   — element-wise register max for dense files, the union monoid of
-   src/hll.js:345-346 — then the estimator once per group.
-
-Steps 2-3 are the shared sketch harness (:mod:`.sketch_agg`, kind
-``'hll'``) for engine='python'/'explicit'; engine='sql' computes the
-registers in Catalyst instead (:func:`hll_sketch_sql`).
+- **xxhash64 / raw** (:func:`_dense_sketch`): Catalyst computes the
+  registers as a two-phase ``max(rho)`` aggregate per (keys, register
+  index); Python assembles <= m rows per group and runs the estimator.
+- **murmur3, and the exact EXPLICIT tier**: the mapInPandas sketch
+  harness (:mod:`.sketch_agg`, kind ``'hll'``) folds each partition to
+  one sketch per key, then unions them — element-wise register max for
+  dense files, the union monoid of src/hll.js:345-346.
 
 Skew note: the partial stage is itself the skew mitigation — a hot key
-('en' at 60%) still produces exactly one partial row per partition, so
-the merge shuffle is uniform in the number of partitions, never in the
-number of raw rows.
+('en' at 60%) still produces a bounded number of partial rows per
+partition, so the merge shuffle is uniform in the number of partitions,
+never in the number of raw rows.
 """
 
 from __future__ import annotations
@@ -45,6 +44,16 @@ from .sketch_agg import _VAL, aggregate_sketches, keyed_carry_stream, merge_sket
 _SKETCH_COL = "sketch"
 _ROWS_COL = "rows_seen"
 _NDV_FIELDS = [StructField("ndv", DoubleType(), False)]
+
+
+def check_engine(engine: str) -> None:
+    """Reject an ``engine`` other than 'auto' or 'explicit' — the dense
+    register path is picked by ``hash_method``, not by an engine."""
+    if engine not in ("auto", "explicit"):
+        raise ValueError(
+            f"engine must be 'auto' or 'explicit', got {engine!r} — the "
+            "dense register path follows hash_method"
+        )
 
 
 def _ndv(s: HLL) -> dict:
@@ -106,30 +115,32 @@ def hll_sketch(
     spec-encoded ``sketch`` column, an ``ndv`` estimate and ``rows_seen``.
 
     ``hash_method``: 'xxhash64' (JVM, default), 'murmur3' (AK
-    convention, numpy-vectorized in the worker; only valid for integral
-    value columns), or 'raw' — ``value_col`` already holds 64-bit hashed
-    values and is sketched as-is (the reference's addRaw contract,
-    src/hll.js:262-268, at DataFrame level; for interop with
+    convention, numpy-vectorized in the worker; integral, string or
+    binary value columns), or 'raw' — ``value_col`` already holds 64-bit
+    hashed values and is sketched as-is (the reference's addRaw
+    contract, src/hll.js:262-268, at DataFrame level; for interop with
     AK-ecosystem producers that hash upstream).
 
-    ``engine``: 'sql' computes registers inside Catalyst (hll_sketch_sql
-    — fastest, default for xxhash64); 'python' runs the mapInPandas
-    sketch harness (required for murmur3, supports the memory budget).
-    Both build dense register files and produce bit-identical sketches.
-    'auto' picks by hash_method.
+    ``engine='auto'`` (default) builds dense register files on the path
+    the hash picks: xxhash64 and raw hashes stay in the JVM, where
+    Catalyst computes the registers (:func:`_dense_sketch`); murmur3
+    must hash in Python anyway, so it runs the mapInPandas sketch
+    harness (:mod:`.sketch_agg`), which also honours
+    ``memory_budget_bytes``. Both produce bit-identical sketches for the
+    same hashes.
 
-    'explicit' builds TRUE explicit-mode sketches on the same harness:
-    each partial's EXPLICIT set holds the exact 64-bit hashes (spec
-    encoding preserves the type across the shuffle), merged per key by
-    set union. While every per-key distinct count stays under the auto
-    explicit threshold, the estimate is an exact count of distinct
+    ``engine='explicit'`` builds TRUE explicit-mode sketches on the
+    harness: each partial's EXPLICIT set holds the exact 64-bit hashes
+    (spec encoding preserves the type across the shuffle), merged per
+    key by set union. While every per-key distinct count stays under the
+    auto explicit threshold, the estimate is an exact count of distinct
     hashes — equal to countDistinct absent a 64-bit hash collision. This
-    is the oracle tier: use it wherever a query claims exactness. (The
-    dense engines' estimates at m >> n are merely NEAR-exact — linear
-    counting lands within ±1 and can flip a floor/cast, which is why
-    exact claims must not ride on them.) State per key is bounded by the
-    explicit threshold (8 bytes x threshold before promotion); past it
-    the sketch promotes and estimates degrade gracefully to the dense
+    is the oracle tier: use it wherever a query claims exactness. (Dense
+    estimates at m >> n are merely NEAR-exact — linear counting lands
+    within ±1 and can flip a floor/cast, which is why exact claims must
+    not ride on them.) State per key is bounded by the explicit
+    threshold (8 bytes x threshold before promotion); past it the
+    sketch promotes and estimates degrade gracefully to the dense
     tier's accuracy.
 
     Float/double group keys: NaN and NULL conflate across the Arrow
@@ -137,39 +148,30 @@ def hll_sketch(
     merges into the null group in the Python-side assembly — cast such
     keys to string/int upstream if NaN must stay a distinct group.
 
-    High-cardinality group keys: both engines carry O(keys x m) state —
-    the sql engine in Catalyst's spill-capable HashAggregate, the python
-    engine in a byte-budgeted dict that flushes. Prefer a smaller log2m
-    when sketching per-key over millions of keys (the error bound is per
+    High-cardinality group keys: every path carries O(keys x m) state —
+    the Catalyst path in its spill-capable HashAggregate, the harness in
+    a byte-budgeted dict that flushes. Prefer a smaller log2m when
+    sketching per-key over millions of keys (the error bound is per
     sketch, and tiny groups saturate far below m registers anyway).
     """
-    HLLConfig(log2m, regwidth)  # fail fast on an invalid shape
+    config = HLLConfig(log2m, regwidth)  # fail fast on an invalid shape
+    check_engine(engine)
     keys = list(by)
-
-    if engine == "auto":
-        engine = "sql" if hash_method in ("xxhash64", "raw") else "python"
-    if engine == "sql":
-        if hash_method not in ("xxhash64", "raw"):
-            raise ValueError("engine='sql' supports only xxhash64 or raw")
-        if hash_method == "raw":
-            # reference addRaw parity at DataFrame level: value_col
-            # already holds 64-bit hashes; sketch them directly, no re-hash
-            df, value_col = _hashed_values(df, value_col, keys, "raw"), _VAL
-        return hll_sketch_sql(
+    if engine == "auto" and hash_method in ("xxhash64", "raw"):
+        return _dense_sketch(
             df,
             value_col,
-            by,
-            log2m=log2m,
-            regwidth=regwidth,
+            keys,
+            hash_method,
+            config,
             estimate=estimate,
             keep_sketch=keep_sketch,
-            _prehashed=hash_method == "raw",
-            _count_rows=_count_rows,
+            count_rows=_count_rows,
         )
 
     params = {"log2m": log2m, "regwidth": regwidth, "hash_method": hash_method}
-    if engine != "explicit":
-        # dense register files, byte-identical to engine='sql'
+    if engine == "auto":
+        # dense register files, byte-identical to the Catalyst path
         params.update(explicit_threshold=0, sparse_on=False)
     out = aggregate_sketches(
         _hashed_values(df, value_col, keys, hash_method),
@@ -188,66 +190,52 @@ def hll_sketch(
     )
 
 
-def hll_sketch_sql(
+def _dense_sketch(
     df: DataFrame,
     value_col: str,
-    by: Sequence[str] = (),
+    keys: list[str],
+    hash_method: str,
+    config: HLLConfig,
     *,
-    log2m: int = 13,
-    regwidth: int = 5,
-    estimate: bool = True,
-    keep_sketch: bool = True,
-    _prehashed: bool = False,
-    _count_rows: bool = True,
+    estimate: bool,
+    keep_sketch: bool,
+    count_rows: bool,
 ) -> DataFrame:
-    """All-JVM variant of hll_sketch: the register file is computed by
-    Catalyst itself as ``groupBy(keys, register_index).agg(max(rho))``
-    with rho = 1 + ctz(h >> log2m) expressed via ``bit_count`` — the
-    whole per-row path stays inside whole-stage codegen and the partial
-    HashAggregate collapses each partition to <= m rows per key before
-    the shuffle. Python sees only <= m (index, value) rows per group, to
-    assemble registers and run the estimator once.
+    """The all-JVM dense path of hll_sketch: Catalyst computes the
+    register file itself as ``groupBy(keys, register_index).agg(max(rho))``
+    over the :func:`_hashed_values` projection, with rho = 1 + ctz(h >>
+    log2m) expressed via ``bit_count`` — the whole per-row path stays
+    inside whole-stage codegen and the partial HashAggregate collapses
+    each partition to <= m rows per key before the shuffle. Python sees
+    only <= m (index, value) rows per group, to assemble registers and
+    run the estimator once.
 
     Trade-off vs the mapInPandas harness: no Arrow transfer of raw
     hashes (wins when rows >> m x partitions), but the shuffle carries
     up to m rows per (key, partition) instead of one ~m-byte blob.
     Results are bit-identical between the two paths (tested).
-
-    ``_prehashed``: ``value_col`` already holds the xxhash64 value (used
-    by hll_ndv_multi's one-scan long form; caller filtered nulls).
     """
-    config = HLLConfig(log2m, regwidth)
-    keys = list(by)
-
     # UNKEYED ONLY: the partial HashAggregate emits m rows per PARTITION
     # before the only data shuffle, so the map-task count is a direct
     # multiplier on shuffle volume while per-task partial state is
     # EXACTLY m registers (~8 KB) no matter how many splits a task
-    # absorbs — coalescing a batch input that arrives in more partitions
-    # than cores down to defaultParallelism is therefore a pure win
-    # (narrow, no shuffle; merge-order independence keeps the sketch
-    # bit-identical). Measured: 24M-row webtext cache, 128 -> 32 tasks,
-    # 1.63 -> 0.81 s; spark-submit scan at 16 MB splits, ndv leg flat at
-    # local[8] (6.28 vs 6.31 s) and 4.97 -> 3.05 s at local[32], ndv
-    # double bit-identical in every run. The KEYED path deliberately
-    # keeps the input partitioning: per-task partial state there is
-    # (keys-in-task x m), and merging key-clustered splits multiplies it
-    # — measured 15.8 -> 26.0 s on the (lang, day) grouped leg at
-    # local[8] (time-clustered scan, ~80 splits/task) before this rule
-    # was restricted to the unkeyed case. A no-op whenever the input
-    # already arrives in <= cores partitions (every _t_auto/pristine
-    # source, any AQE-coalesced shuffle output).
+    # absorbs — coalescing a batch input to defaultParallelism is
+    # therefore a pure win (narrow, no shuffle; merge-order independence
+    # keeps the sketch bit-identical), and a no-op on inputs that already
+    # arrive in fewer partitions (coalesce never raises the count).
+    # Measured: 24M-row webtext cache, 128 -> 32 tasks, 1.63 -> 0.81 s;
+    # spark-submit scan at 16 MB splits, ndv leg flat at local[8] (6.28
+    # vs 6.31 s) and 4.97 -> 3.05 s at local[32], ndv double
+    # bit-identical in every run. The KEYED path deliberately keeps the
+    # input partitioning: per-task partial state there is (keys-in-task
+    # x m), and merging key-clustered splits multiplies it — measured
+    # 15.8 -> 26.0 s on the (lang, day) grouped leg at local[8]
+    # (time-clustered scan, ~80 splits/task).
     if not keys and not df.isStreaming:
-        _cores = df.sparkSession.sparkContext.defaultParallelism
-        if df.rdd.getNumPartitions() > _cores:
-            df = df.coalesce(_cores)
+        df = df.coalesce(df.sparkSession.sparkContext.defaultParallelism)
+    hashed = _hashed_values(df, value_col, keys, hash_method)
 
-    if _prehashed:
-        h = F.col(value_col)
-    else:
-        # countDistinct semantics
-        df = df.filter(F.col(value_col).isNotNull())
-        h = F.xxhash64(F.col(value_col))
+    h = F.col(_VAL)
     idx = h.bitwiseAND(F.lit(config.register_index_mask)).alias("__idx")
     w = F.shiftrightunsigned(h, config.log2m)
     # ctz(w) = bit_count(~w & (w - 1)); rho = min(maxreg, ctz + 1), 0 if w=0
@@ -257,72 +245,33 @@ def hll_sketch_sql(
         .otherwise(F.least(F.lit(config.max_register_value), ctz + F.lit(1)))
         .alias("__rho")
     )
-    # ``_count_rows=False`` (the hll_ndv fast path, r7): callers that
+    # ``count_rows=False`` (the hll_ndv fast path, r7): callers that
     # discard rows_seen skip the second aggregation buffer — every input
     # row otherwise updates a count slot beside the max slot in the
     # partial HashAggregate, pure overhead when only ndv survives
     aggs = [F.max("__rho").alias("__val")]
-    if _count_rows:
+    if count_rows:
         aggs.append(F.count(F.lit(1)).alias("__n"))
     per_register = (
-        df.select(*keys, idx, rho).groupBy(*keys, "__idx").agg(*aggs)
+        hashed.select(*keys, idx, rho).groupBy(*keys, "__idx").agg(*aggs)
     )
-    if not _count_rows:
+    if not count_rows:
         per_register = per_register.withColumn(
             "__n", F.lit(0).cast("long")
         )
 
-    def assemble(pdf: pd.DataFrame) -> pd.DataFrame:
-        regs = np.zeros(config.m, dtype=np.uint8)
-        # max-merge, not assignment: rows are unique per idx post-agg
-        # EXCEPT for the empty-input seed row (idx 0, val 0), which must
-        # never overwrite a real register
-        np.maximum.at(
-            regs, pdf["__idx"].to_numpy(), pdf["__val"].to_numpy()
-        )
-        out = {k: [pdf[k].iloc[0]] for k in keys}
-        if keep_sketch:
-            s = HLL(config, explicit_threshold=0, sparse_on=False)
-            s._regs = regs
-            out[_SKETCH_COL] = [s.to_bytes()]
-        if estimate:
-            out["ndv"] = [estimate_from_registers(regs, config)]
-        out[_ROWS_COL] = [int(pdf["__n"].sum())]
-        return pd.DataFrame(out)
-
-    fields = [df.schema[k] for k in keys]
+    fields = [hashed.schema[k] for k in keys]
     if keep_sketch:
         fields.append(StructField(_SKETCH_COL, BinaryType(), False))
     if estimate:
         fields.append(StructField("ndv", DoubleType(), False))
     fields.append(StructField(_ROWS_COL, LongType(), False))
     schema = StructType(fields)
-    if not keys:
-        # seed one (idx 0, val 0, n 0) row: an empty/all-null input must
-        # still produce one global row with ndv 0 (countDistinct
-        # semantics) — regs[0] = max(·, 0) leaves real inputs untouched
-        seed = df.sparkSession.range(1).select(
-            F.lit(0).cast("long").alias("__idx"),
-            F.lit(0).alias("__val"),
-            F.lit(0).cast("long").alias("__n"),
-        )
-        per_register = per_register.unionByName(seed)
-        return per_register.groupBy(F.lit(1).alias("__g")).applyInPandas(
-            lambda pdf: assemble(pdf), schema=schema
-        )
 
-    # Keyed assembly streams WHOLE Arrow batches through one python call
-    # instead of one applyInPandas call per group — per-group python
-    # overhead (~ms) otherwise dominates at high key cardinality (1M
-    # groups x 2 ms = half a python-hour on one stage). Same shuffle
-    # count as groupBy (hash repartition + in-partition sort); registers
-    # and estimates go through the identical numpy code, so outputs stay
-    # bit-identical to the per-group path (tested). Shares the carry
-    # skeleton with the sketch harness's keyed merge stage.
     def prepare(pdf):
         return (
             pdf["__idx"].to_numpy(),
-            pdf["__val"].to_numpy(),
+            pdf["__val"].to_numpy().astype(np.uint8),
             pdf["__n"].to_numpy(),
         )
 
@@ -331,9 +280,10 @@ def hll_sketch_sql(
         if state is None:
             state = (np.zeros(config.m, dtype=np.uint8), 0)
         regs, nsum = state
-        # (key, idx) rows are unique post-agg; a key straddling two
-        # batches contributes disjoint idx sets -> assignment
-        regs[idx_a[start:end]] = val_a[start:end]
+        # max-merge, not assignment: (key, idx) rows are unique post-agg
+        # EXCEPT for the unkeyed empty-input seed row (idx 0, val 0),
+        # which must never overwrite a real register
+        np.maximum.at(regs, idx_a[start:end], val_a[start:end])
         return regs, nsum + int(n_a[start:end].sum())
 
     def finish(key, state):
@@ -348,6 +298,33 @@ def hll_sketch_sql(
         row.append(nsum)
         return tuple(row)
 
+    if not keys:
+        # seed one (idx 0, val 0, n 0) row: an empty/all-null input must
+        # still produce one global row with ndv 0 (countDistinct
+        # semantics)
+        seed = df.sparkSession.range(1).select(
+            F.lit(0).cast("long").alias("__idx"),
+            F.lit(0).alias("__val"),
+            F.lit(0).cast("long").alias("__n"),
+        )
+        return (
+            per_register.unionByName(seed)
+            .groupBy(F.lit(1).alias("__g"))
+            .applyInPandas(
+                lambda pdf: pd.DataFrame(
+                    [finish((), fold(None, prepare(pdf), 0, len(pdf)))],
+                    columns=schema.fieldNames(),
+                ),
+                schema=schema,
+            )
+        )
+
+    # Keyed assembly streams WHOLE Arrow batches through one python call
+    # instead of one applyInPandas call per group — per-group python
+    # overhead (~ms) otherwise dominates at high key cardinality (1M
+    # groups x 2 ms = half a python-hour on one stage). Same shuffle
+    # count as groupBy (hash repartition + in-partition sort); shares
+    # the carry skeleton with the sketch harness's keyed merge stage.
     return keyed_carry_stream(
         per_register, keys, schema, prepare=prepare, fold=fold, finish=finish
     )
@@ -374,7 +351,7 @@ def hll_ndv(
         estimate=True,
         keep_sketch=False,
         engine=engine,
-        # ndv drops rows_seen — skip its aggregation buffer (sql engine)
+        # ndv drops rows_seen — skip its aggregation buffer
         _count_rows=False,
     )
     return out.select(*by, "ndv")
@@ -416,15 +393,15 @@ def hll_ndv_multi(
             F.col("__s.__h").alias("__h"),
         )
     )
-    out = hll_sketch_sql(
+    out = _dense_sketch(
         tagged,
         "__h",
         keys + ["__col"],
-        log2m=log2m,
-        regwidth=regwidth,
+        "raw",
+        HLLConfig(log2m, regwidth),
         estimate=True,
         keep_sketch=False,
-        _prehashed=True,
+        count_rows=False,
     )
     return out.select(*keys, F.col("__col").alias("column"), "ndv")
 

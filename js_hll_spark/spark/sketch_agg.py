@@ -114,7 +114,7 @@ def norm_group_key(g) -> tuple:
 
 def keyed_carry_stream(partials, group_cols, schema, *, prepare, fold, finish):
     """The sorted-stream-with-carry skeleton behind every keyed merge
-    (the harness's merge stage and hll_sketch_sql's register assembly)
+    (the harness's merge stage and the dense HLL register assembly)
     — ONE implementation of the subtle part: null-safe group
     boundaries, per-segment folding, the cross-Arrow-batch carry, the
     end-of-iterator flush. One python call per Arrow batch instead of
@@ -161,15 +161,9 @@ def keyed_carry_stream(partials, group_cols, schema, *, prepare, fold, finish):
 # ---------------------------------------------------------------- kinds --
 
 
-def _cms_update(s: CountMinSketch, v: np.ndarray, counts: np.ndarray | None = None) -> None:
-    if counts is not None:
-        # pre-aggregated (value, count) pairs from the JVM HashAggregate
-        s.update_hashed(to_uint64(v), counts.astype(np.int64, copy=False))
-        return
-    # pre-aggregate the batch: real token streams repeat heavily, and one
-    # np.add.at per unique value beats 130M scattered adds by 10-50x
-    u, c = np.unique(to_uint64(v), return_counts=True)
-    s.update_hashed(u, c)
+def _cms_update(s: CountMinSketch, v: np.ndarray, counts: np.ndarray) -> None:
+    # (hash, count) pairs pre-aggregated by the JVM HashAggregate
+    s.update_hashed(to_uint64(v), counts.astype(np.int64, copy=False))
 
 
 def _topk_values(pdf: pd.DataFrame, p: dict) -> np.recarray:
@@ -201,8 +195,8 @@ def _hll_values(pdf: pd.DataFrame, p: dict) -> np.ndarray:
 
 _KINDS: dict[str, dict] = {
     # explicit_threshold=0, sparse_on=False gives dense register files
-    # (hll_sketch engine='python'); the defaults give the exact
-    # EXPLICIT tier (engine='explicit')
+    # (hll_sketch's murmur3 path); the defaults give the exact EXPLICIT
+    # tier (engine='explicit')
     "hll": {
         "factory": lambda p: HLL(
             HLLConfig(p.get("log2m", 13), p.get("regwidth", 5)),
@@ -471,7 +465,7 @@ def sketch_agg(
     # materialize as one phantom value (bloom: NULL probes report
     # member; cms: phantom heavy hitter with the null count)
     df = df.filter(F.col(value_col).isNotNull())
-    if kind == "cms" and params.get("pre_aggregate", True):
+    if kind == "cms":
         src = (
             df.select(*keys, F.xxhash64(F.col(value_col)).alias(_VAL))
             .groupBy(*keys, _VAL)

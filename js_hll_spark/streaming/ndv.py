@@ -31,7 +31,7 @@ from typing import Sequence
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ..core.hll import HLL
-from ..spark.agg import hll_sketch
+from ..spark.agg import check_engine, hll_sketch
 from ..spark.blocks import checkpoint_rdd_id, unpersist_by_id
 from ..spark.functions import hll_cardinality_udf
 from ..spark.sketch_agg import merge_sketches
@@ -94,8 +94,8 @@ def streaming_ndv(
     documents the freshness bound). ``engine='explicit'`` builds TRUE
     EXPLICIT-mode sketches (exact hash sets until the explicit
     threshold), whose estimates are exact distinct counts — the oracle
-    tier; 'sql'/'python' build dense registers (the fixed-bytes scale
-    tier). Read estimates any time with
+    tier; 'auto' builds dense registers (the fixed-bytes scale tier).
+    Any other value raises ValueError. Read estimates any time with
     ``read_ndv_state(spark, state_dir)``.
 
     ``retention`` (e.g. ``"7 days"``) bounds the state table: after each
@@ -107,6 +107,7 @@ def streaming_ndv(
     drops rows it would still update. Default None keeps everything
     (the oracle tier replays bounded history and checks every window).
     """
+    check_engine(engine)  # before the stream starts, not in a batch
     spark = stream.sparkSession
     keys = list(keys)
     state_path = os.path.join(state_dir, "state")  # legacy (pre-r6) layout

@@ -534,3 +534,23 @@ def test_estimate_many_bit_identical():
             assert got != got
         else:
             assert got == want, (i, got, want)
+
+
+@pytest.mark.parametrize("log2m", [10, 12, 14])
+@pytest.mark.parametrize("regwidth", [4, 5, 6])
+def test_sparse_estimate_equals_full_twin(log2m, regwidth):
+    """SPARSE and FULL share one estimator and correction ladder: at
+    every fill level across the sparse tier, a SPARSE sketch's estimate
+    equals, bit for bit, that of its FULL twin fed the same hashes."""
+    rng = np.random.default_rng(log2m * 10 + regwidth)
+    sparse = HLL(HLLConfig(log2m, regwidth), explicit_threshold=0, sparse_on=True)
+    full = full_hll(log2m, regwidth)
+    checked = 0
+    while sparse._sparse is not None:
+        assert sparse.algorithm_cardinality() == full.algorithm_cardinality()
+        checked += 1
+        batch = rng.integers(0, 2**64, size=int(rng.integers(1, 32)), dtype=np.uint64)
+        sparse.add_raw64(batch)
+        full.add_raw64(batch)
+    assert checked > 10  # the sparse tier was really walked
+    assert np.array_equal(sparse.registers(), full.registers())

@@ -114,9 +114,7 @@ def test_durable_posting_stage(spark, pages, tmp_path):
     # that stage (the default composition additionally pins the hashed
     # postings via localCheckpoint, which is orthogonal to durability)
     lazy = dedup.ngram_jaccard(
-        pairs=dedup.minhash_lsh_candidates(
-            postings=durable, k=8, bands=4, materialize=False
-        ),
+        pairs=dedup.minhash_lsh_candidates(postings=durable, k=8, bands=4),
         postings=durable,
         threshold=0.5,
         materialize=False,

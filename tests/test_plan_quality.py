@@ -23,7 +23,7 @@ def test_ndv_scan_prunes_columns(spark, lineitem, tmp_path):
     path = str(tmp_path / "li")
     lineitem.write.parquet(path)
     df = spark.read.parquet(path)
-    for engine in ("python", "sql"):
+    for engine in ("explicit", "auto"):
         p = plan(
             hll_sketch(df, "l_partkey", by=["l_returnflag"], log2m=12, engine=engine)
         )
@@ -63,13 +63,15 @@ def test_broadcast_join_is_broadcast(spark):
 
 
 def test_merge_shuffle_carries_sketches_not_rows(spark, events):
-    """python engine: the only Exchange shuffles partial sketches, never
-    raw rows — it sits between the partial MapInPandas (below) and the
-    batched merge MapInPandas (above; r4 replaced the per-group
-    applyInPandas merge), with the in-partition Sort for the stream's
-    group-boundary carry."""
+    """Sketch harness (murmur3's dense mode): the only Exchange shuffles
+    partial sketches, never raw rows — it sits between the partial
+    MapInPandas (below) and the batched merge MapInPandas (above; r4
+    replaced the per-group applyInPandas merge), with the in-partition
+    Sort for the stream's group-boundary carry."""
     p = plan(
-        hll_sketch(events, "user_id", by=["event_type"], log2m=12, engine="python")
+        hll_sketch(
+            events, "user_id", by=["event_type"], log2m=12, hash_method="murmur3"
+        )
     )
     assert p.count("Exchange") == 1
     assert p.count("MapInPandas") == 2
@@ -80,12 +82,10 @@ def test_merge_shuffle_carries_sketches_not_rows(spark, events):
 
 
 def test_sql_engine_partial_aggregates_before_shuffle(spark, events):
-    """sql engine: a partial HashAggregate (keys, register index) runs
-    before the single Exchange, so the shuffle carries at most m rows per
-    (key, partition) — never raw rows."""
-    p = plan(
-        hll_sketch(events, "user_id", by=["event_type"], log2m=12, engine="sql")
-    )
+    """Catalyst register path (xxhash64): a partial HashAggregate (keys,
+    register index) runs before the single Exchange, so the shuffle
+    carries at most m rows per (key, partition) — never raw rows."""
+    p = plan(hll_sketch(events, "user_id", by=["event_type"], log2m=12))
     # two exchanges: (key, idx) for the register agg — fed by a PARTIAL
     # HashAggregate that collapses each partition to <= m rows per key —
     # and (key) for the assembly step over <= m agg rows per key
@@ -172,13 +172,11 @@ def test_composed_dedup_single_raw_scan(spark):
 
 
 def test_sql_engine_keyed_assembly_is_batched(spark, events):
-    """The keyed sql-engine assembly must be the batched mapInPandas
-    shape (repartition + sort + MapInPandas), never per-group
+    """The keyed Catalyst-register assembly must be the batched
+    mapInPandas shape (repartition + sort + MapInPandas), never per-group
     FlatMapGroupsInPandas — per-group python calls are a scale
     bottleneck at high key cardinality."""
-    p = plan(
-        hll_sketch(events, "user_id", by=["event_type"], log2m=12, engine="sql")
-    )
+    p = plan(hll_sketch(events, "user_id", by=["event_type"], log2m=12))
     assert "MapInPandas" in p
     assert "FlatMapGroupsInPandas" not in p
     assert p.count("Exchange") == 2  # partial-agg shuffle + key repartition

@@ -7,10 +7,11 @@ from __future__ import annotations
 
 import math
 
+import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
-from js_hll_spark import HLL
+from js_hll_spark import HLL, HLLConfig
 from js_hll_spark.spark.agg import hll_ndv, hll_rollup, hll_sketch
 from js_hll_spark.spark.functions import (
     hll_cardinality_udf,
@@ -20,6 +21,34 @@ from js_hll_spark.spark.functions import (
 )
 
 BOUND = lambda log2m: 1.04 / math.sqrt(2 ** log2m)  # noqa: E731
+
+
+def numpy_dense(df, value_col, by=(), *, log2m, regwidth=5):
+    """{group key tuple: (sketch bytes, ndv, rows_seen)} built by the
+    numpy core from the JVM's xxhash64 of every non-NULL value — the
+    reference for the Catalyst register path."""
+    groups: dict[tuple, list] = {}
+    for r in (
+        df.filter(F.col(value_col).isNotNull())
+        .select(*by, F.xxhash64(value_col).alias("h"))
+        .collect()
+    ):
+        groups.setdefault(tuple(r[k] for k in by), []).append(r["h"])
+    out = {}
+    for key, hashes in groups.items():
+        s = HLL(HLLConfig(log2m, regwidth), explicit_threshold=0, sparse_on=False)
+        s.add_raw64(np.array(hashes, dtype=np.int64))
+        out[key] = (s.to_bytes(), s.algorithm_cardinality(), len(hashes))
+    return out
+
+
+def sketch_rows(df, by):
+    """{group key tuple: (sketch bytes, ndv, rows_seen)} of hll_sketch
+    output, in numpy_dense's shape."""
+    return {
+        tuple(r[k] for k in by): (bytes(r["sketch"]), r["ndv"], r["rows_seen"])
+        for r in df.collect()
+    }
 
 
 def test_global_ndv_events(spark, events):
@@ -46,31 +75,28 @@ def test_grouped_ndv_matches_exact(spark, events):
 
 def test_partition_order_invariance_spark(spark, documents):
     """Bit-identical merged sketch regardless of partitioning (the
-    BASELINE merge clause, at the DataFrame level) — both engines."""
-    for engine in ("python", "sql"):
-        a = hll_sketch(documents, "text", log2m=11, engine=engine).first()["sketch"]
-        shuffled = documents.repartition(16, "doc_id")
-        b = hll_sketch(shuffled, "text", log2m=11, engine=engine).first()["sketch"]
-        assert bytes(a) == bytes(b), engine
+    BASELINE merge clause, at the DataFrame level) — on the Catalyst
+    path, where it also equals the numpy core's build, and on the
+    harness (murmur3)."""
+    shuffled = documents.repartition(16, "doc_id")
+    for hash_method in ("xxhash64", "murmur3"):
+        a, b = (
+            bytes(hll_sketch(df, "text", log2m=11, hash_method=hash_method)
+                  .first()["sketch"])
+            for df in (documents, shuffled)
+        )
+        assert a == b, hash_method
+        if hash_method == "xxhash64":
+            assert a == numpy_dense(documents, "text", log2m=11)[()][0]
 
 
 def test_engines_bit_identical(spark, events):
-    """The Catalyst-registers engine and the mapInPandas engine produce
-    byte-identical sketches, estimates and rows_seen."""
-    cols = ["event_type", "sketch", "ndv", "rows_seen"]
-    py = {
-        r["event_type"]: (bytes(r["sketch"]), r["ndv"], r["rows_seen"])
-        for r in hll_sketch(
-            events, "user_id", by=["event_type"], log2m=12, engine="python"
-        ).select(cols).collect()
-    }
-    sql = {
-        r["event_type"]: (bytes(r["sketch"]), r["ndv"], r["rows_seen"])
-        for r in hll_sketch(
-            events, "user_id", by=["event_type"], log2m=12, engine="sql"
-        ).select(cols).collect()
-    }
-    assert py == sql
+    """The Catalyst register path produces byte-identical sketches,
+    estimates and rows_seen to the numpy core fed the same hashes."""
+    got = sketch_rows(
+        hll_sketch(events, "user_id", by=["event_type"], log2m=12), ["event_type"]
+    )
+    assert got == numpy_dense(events, "user_id", ["event_type"], log2m=12)
 
 
 def test_rows_seen_accounting(spark, events):
@@ -145,14 +171,16 @@ def test_memory_budget_flush_identical(spark, events):
     rows per key) must produce bit-identical merged sketches."""
     normal = {
         r["event_type"]: bytes(r["sketch"])
-        for r in hll_sketch(events, "user_id", by=["event_type"], log2m=12).collect()
+        for r in hll_sketch(
+            events, "user_id", by=["event_type"], log2m=12, hash_method="murmur3"
+        ).collect()
     }
     # budget of one register file -> flush after every batch
     tiny = {
         r["event_type"]: bytes(r["sketch"])
         for r in hll_sketch(
             events, "user_id", by=["event_type"], log2m=12,
-            memory_budget_bytes=1, engine="python",
+            memory_budget_bytes=1, hash_method="murmur3",
         ).collect()
     }
     assert normal == tiny
@@ -164,7 +192,7 @@ def test_high_cardinality_group_keys(spark, events):
     out = hll_sketch(
         events, "event_id", by=["user_id"], log2m=10,
         memory_budget_bytes=64 << 10,  # ~64 keys of 1 KiB live at once
-        engine="python",
+        hash_method="murmur3",
     )
     rows = out.collect()
     import pyspark.sql.functions as F
@@ -215,7 +243,7 @@ def test_murmur3_string_column(spark, documents):
     from js_hll_spark.hashing import murmur3_64_bytes
 
     est_row = hll_sketch(
-        documents, "text", log2m=12, hash_method="murmur3", engine="python"
+        documents, "text", log2m=12, hash_method="murmur3"
     ).first()
     texts = [r["text"] for r in documents.select("text").collect()]
     local = HLL(HLLConfig(12, 5), explicit_threshold=0, sparse_on=False)
@@ -227,19 +255,16 @@ def test_murmur3_string_column(spark, documents):
 
 def test_large_precision_configs(spark, events):
     """log2m=20 (1M registers, the 'tens of billions NDV' shape) and
-    regwidth=8 run through the full Spark path on both engines with
-    bit-identical results and valid spec encoding."""
-    from js_hll_spark import HLL
-
-    for engine in ("sql", "python"):
-        row = hll_sketch(
-            events, "user_id", log2m=20, regwidth=8, engine=engine
-        ).first()
-        s = HLL.from_bytes(bytes(row["sketch"]))
-        assert s.config.log2m == 20 and s.config.regwidth == 8
-        exact = events.select(F.countDistinct("user_id")).first()[0]
-        # at n << m the estimator is in the linear-counting regime: tight
-        assert abs(row["ndv"] - exact) / exact < 0.01, engine
+    regwidth=8 run through the full Spark path with results
+    bit-identical to the numpy core and valid spec encoding."""
+    row = hll_sketch(events, "user_id", log2m=20, regwidth=8).first()
+    s = HLL.from_bytes(bytes(row["sketch"]))
+    assert s.config.log2m == 20 and s.config.regwidth == 8
+    want = numpy_dense(events, "user_id", log2m=20, regwidth=8)[()]
+    assert (bytes(row["sketch"]), row["ndv"], row["rows_seen"]) == want
+    exact = events.select(F.countDistinct("user_id")).first()[0]
+    # at n << m the estimator is in the linear-counting regime: tight
+    assert abs(row["ndv"] - exact) / exact < 0.01
 
 
 def test_sql_registered_functions(spark, documents):
@@ -273,31 +298,23 @@ def test_sql_registered_functions(spark, documents):
 
 def test_streaming_assembly_matches_pergroup_path(spark, events):
     """The batched mapInPandas assembly must be byte-identical to a
-    per-group build, including keys that straddle Arrow batch boundaries
-    (forced with a tiny batch size) and high-cardinality keys."""
-    from js_hll_spark.spark.agg import hll_sketch
-
+    per-group numpy build, including keys that straddle Arrow batch
+    boundaries (forced with a tiny batch size) and high-cardinality
+    keys."""
     small = spark.conf.get("spark.sql.execution.arrow.maxRecordsPerBatch")
     spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", "7")
     try:
-        got = {
-            r["user_id"]: (bytes(r["sketch"]), r["ndv"], r["rows_seen"])
-            for r in hll_sketch(
-                events.limit(3000), "event_type", by=["user_id"], log2m=10,
-                engine="sql",
-            ).collect()
-        }
+        got = sketch_rows(
+            hll_sketch(
+                events.limit(3000), "event_type", by=["user_id"], log2m=10
+            ),
+            ["user_id"],
+        )
     finally:
         spark.conf.set(
             "spark.sql.execution.arrow.maxRecordsPerBatch", small
         )
-    ref = {
-        r["user_id"]: (bytes(r["sketch"]), r["ndv"], r["rows_seen"])
-        for r in hll_sketch(
-            events.limit(3000), "event_type", by=["user_id"], log2m=10,
-            engine="python",
-        ).collect()
-    }
+    ref = numpy_dense(events.limit(3000), "event_type", ["user_id"], log2m=10)
     assert got.keys() == ref.keys() and len(got) > 50
     for k in got:
         assert got[k] == ref[k], k
@@ -315,7 +332,7 @@ def test_keyed_assembly_null_group_keys(spark):
     small = spark.conf.get("spark.sql.execution.arrow.maxRecordsPerBatch")
     spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", "7")
     try:
-        got = hll_sketch(df, "val", by=["grp"], log2m=11, engine="sql").collect()
+        got = hll_sketch(df, "val", by=["grp"], log2m=11).collect()
         assert len(got) == 6  # null + int groups 0..4
         by_key = {r["grp"]: r for r in got}
         assert None in by_key
@@ -327,14 +344,13 @@ def test_keyed_assembly_null_group_keys(spark):
         }
         for k, r in by_key.items():
             assert abs(r["ndv"] - exact[k]) / exact[k] < 0.2, k
-        # rollup stream over a null-keyed sketch table: same contract
+        # harness partials and rollup stream over a null-keyed sketch
+        # table: same contract, and the EXPLICIT tier stays exact
         fine = hll_sketch(
-            df, "val", by=["grp"], log2m=11, engine="python", estimate=False
+            df, "val", by=["grp"], log2m=11, engine="explicit", estimate=False
         )
         rolled = {r["grp"]: r["ndv"] for r in hll_rollup(fine, ["grp"]).collect()}
-        assert set(rolled) == set(exact)
-        for k in rolled:
-            assert abs(rolled[k] - by_key[k]["ndv"]) < 1e-9, k
+        assert rolled == exact
     finally:
         spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", small)
 
@@ -470,12 +486,12 @@ def test_introspection_and_set_algebra_udfs(spark, events):
 def test_raw_hash_method_addraw_parity(spark, events):
     """hash_method='raw' is the reference addRaw contract at DataFrame
     level: a column of already-64-bit-hashed values sketches bit-identically
-    (both engines) to letting the library hash the originals, when the
-    raw column was produced by the same hash."""
+    (dense and explicit) to letting the library hash the originals, when
+    the raw column was produced by the same hash."""
     pre = events.select(
         "event_type", F.xxhash64("user_id").alias("h")
     )
-    for engine in ("sql", "python"):
+    for engine in ("auto", "explicit"):
         via_raw = {
             r["event_type"]: (bytes(r["sketch"]), r["ndv"])
             for r in hll_sketch(
@@ -486,7 +502,7 @@ def test_raw_hash_method_addraw_parity(spark, events):
         direct = {
             r["event_type"]: (bytes(r["sketch"]), r["ndv"])
             for r in hll_sketch(
-                events, "user_id", by=["event_type"], log2m=12, engine="sql"
+                events, "user_id", by=["event_type"], log2m=12, engine=engine
             ).collect()
         }
         assert via_raw == direct, engine
@@ -598,15 +614,18 @@ def test_merge_sketch_tables_null_key_rows_seen(spark):
 def test_building_sketch_dataframes_runs_no_spark_job(spark, events, documents):
     """Building a sketch DataFrame must launch no Spark job — the
     explicit tier, merge_sketch_tables and heavy_hitters used to
-    checkpoint eagerly (1, 5 and 1 jobs); the python engine and
-    sketch_agg are guards. Each plan still runs when collected."""
+    checkpoint eagerly (1, 5 and 1 jobs), and unkeyed hll_ndv probed a
+    shuffled input's partition count (1 job); the harness's dense
+    murmur3 mode and sketch_agg are guards. Each plan still runs when
+    collected."""
     from js_hll_spark.spark.sketch_agg import heavy_hitters, sketch_agg
     from js_hll_spark.streaming.ndv import merge_sketch_tables
 
     a = hll_sketch(events.filter(F.col("user_id") % 2 == 0), "user_id",
-                   by=["event_type"], log2m=10, engine="python")
+                   by=["event_type"], log2m=10, hash_method="murmur3")
     b = hll_sketch(events.filter(F.col("user_id") % 2 == 1), "user_id",
-                   by=["event_type"], log2m=10, engine="python")
+                   by=["event_type"], log2m=10, hash_method="murmur3")
+    shuffled = spark.range(200_000).select(F.col("id").alias("v")).repartition(8)
     tokens = documents.select("lang", F.explode(F.split("text", " ")).alias("tok"))
     builds = {
         "explicit-keyed": lambda: hll_sketch(
@@ -616,9 +635,10 @@ def test_building_sketch_dataframes_runs_no_spark_job(spark, events, documents):
             events, "user_id", log2m=12, engine="explicit"
         ),
         "merge-sketch-tables": lambda: merge_sketch_tables(a, b, ["event_type"]),
-        "python": lambda: hll_sketch(
-            events, "user_id", by=["event_type"], log2m=12, engine="python"
+        "murmur3": lambda: hll_sketch(
+            events, "user_id", by=["event_type"], log2m=12, hash_method="murmur3"
         ),
+        "dense-unkeyed-shuffled": lambda: hll_ndv(shuffled, "v"),
         "kll": lambda: sketch_agg(events, "value", by=["event_type"], kind="kll"),
         "heavy-hitters": lambda: heavy_hitters(tokens, "tok", k=10),
         "heavy-hitters-keyed": lambda: heavy_hitters(
@@ -684,8 +704,8 @@ def test_scalar_udfs_null_blobs_return_null(spark):
 
 def test_global_ndv_empty_input_returns_zero_row(spark):
     """countDistinct semantics: an empty or all-NULL input yields ONE
-    global row with ndv 0 in every engine (it used to return zero
-    rows, silently vanishing from downstream crossJoins)."""
+    global row with ndv 0 on every path (it used to return zero rows,
+    silently vanishing from downstream crossJoins)."""
     import pyspark.sql.functions as F
 
     empty = spark.range(10).select(
@@ -693,10 +713,28 @@ def test_global_ndv_empty_input_returns_zero_row(spark):
     )
     none_at_all = spark.range(0).select(F.col("id").alias("v"))
     for df in (empty, none_at_all):
-        for engine in ("sql", "python", "explicit"):
-            rows = hll_sketch(df, "v", log2m=10, engine=engine).collect()
-            assert len(rows) == 1, engine
+        for hash_method, engine in (
+            ("xxhash64", "auto"), ("murmur3", "auto"), ("xxhash64", "explicit")
+        ):
+            rows = hll_sketch(
+                df, "v", log2m=10, hash_method=hash_method, engine=engine
+            ).collect()
+            assert len(rows) == 1, (hash_method, engine)
             assert rows[0]["ndv"] == 0.0 and rows[0]["rows_seen"] == 0
+
+
+def test_unkeyed_seed_row_never_lowers_register_zero(spark):
+    """The unkeyed Catalyst assembly folds an empty-input seed row
+    (register 0, value 0) beside the real rows: a hash that lands in
+    register 0 must keep its value whatever order the rows arrive in."""
+    h = 1 << 11  # log2m=11: register 0, rho 1
+    for n in (1, 4):
+        df = spark.range(n).select(F.lit(h).cast("long").alias("v")).repartition(n)
+        row = hll_sketch(df, "v", log2m=11, hash_method="raw").first()
+        local = HLL(HLLConfig(11, 5), explicit_threshold=0, sparse_on=False)
+        local.add_raw64(np.array([h], dtype=np.uint64))
+        assert bytes(row["sketch"]) == local.to_bytes(), n
+        assert row["ndv"] == local.algorithm_cardinality() > 0, n
 
 
 def test_murmur3_rejects_float_columns(spark):
@@ -706,7 +744,7 @@ def test_murmur3_rejects_float_columns(spark):
     import pytest as _pytest
 
     df = spark.range(10).select((F.col("id") * 1.5).alias("v"))
-    for engine in ("python", "explicit"):
+    for engine in ("auto", "explicit"):
         with _pytest.raises(ValueError, match="integral/string/binary"):
             hll_sketch(df, "v", hash_method="murmur3", engine=engine)
 
@@ -714,7 +752,7 @@ def test_murmur3_rejects_float_columns(spark):
 def test_keyed_merge_carry_across_tiny_arrow_batches(spark, events):
     """The batched keyed merges carry group state across Arrow batch
     boundaries: forcing 7-row batches must change nothing — for the HLL
-    python-engine merge (byte-identical sketches) AND the companion
+    harness merge (byte-identical sketches) AND the companion
     keyed merge (identical quantiles/rows), including a null group key."""
     import pyspark.sql.functions as F
 
@@ -730,7 +768,7 @@ def test_keyed_merge_carry_across_tiny_arrow_batches(spark, events):
         hll = {
             r["g"]: (bytes(r["sketch"]), r["ndv"], r["rows_seen"])
             for r in hll_sketch(
-                ev, "event_id", by=["g"], log2m=10, engine="python"
+                ev, "event_id", by=["g"], log2m=10, hash_method="murmur3"
             ).collect()
         }
         q = {
@@ -806,3 +844,21 @@ def test_default_cutoff_byte_threshold_alone_is_encoded():
     assert default_cutoff_byte(explicit_auto=True) & 63 == 63
     assert default_cutoff_byte(explicit_auto=False) & 63 == 0
     assert default_cutoff_byte() & 63 == 63
+
+
+def test_retired_engines_raise(spark, events, tmp_path):
+    """engine accepts only 'auto' and 'explicit': the dense register
+    path follows hash_method, so the retired 'python' and 'sql' values
+    raise instead of silently picking a path."""
+    from js_hll_spark.streaming.ndv import streaming_ndv
+
+    for engine in ("python", "sql"):
+        with pytest.raises(ValueError, match="engine"):
+            hll_sketch(events, "user_id", engine=engine)
+        with pytest.raises(ValueError, match="engine"):
+            hll_ndv(events, "user_id", by=["event_type"], engine=engine)
+        with pytest.raises(ValueError, match="engine"):
+            streaming_ndv(
+                events, "user_id", ts_col="ts", state_dir=str(tmp_path),
+                engine=engine,
+            )

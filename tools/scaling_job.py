@@ -19,11 +19,6 @@ import time
 
 from pyspark.sql import SparkSession, functions as F
 
-# 'sql' (Catalyst registers, default) or 'python' (mapInPandas harness) —
-# both produce bit-identical sketches; see BENCH/BASELINE.md for why both
-# are measured
-ENGINE = os.environ.get("SCALING_ENGINE", "auto")
-
 
 def main(input_path: str, cores: int) -> None:
     spark = (
@@ -52,17 +47,14 @@ def main(input_path: str, cores: int) -> None:
             out = out.unionByName(df)
         return out
 
-    # scan-replication amplifies short sql-engine runtimes so timings are
-    # sustained-throughput, not overhead; the python engine is compute-
-    # bound already and is measured at 1x (r1 protocol) — at 6x the
-    # repeated JVM parquet decode becomes the bottleneck and the harness'
-    # own scaling is no longer what's measured
+    # scan-replication amplifies short Catalyst-register runtimes so
+    # timings are sustained-throughput, not overhead
     R_NDV = int(os.environ.get("SCALING_REPL_NDV", 6))
     R_GROUPED = int(os.environ.get("SCALING_REPL_GROUPED", 3))
 
     def run_ndv():
         return hll_ndv(
-            replicate(pages, R_NDV), "url", log2m=13, engine=ENGINE
+            replicate(pages, R_NDV), "url", log2m=13
         ).first()["ndv"]
 
     def run_grouped():
@@ -71,7 +63,6 @@ def main(input_path: str, cores: int) -> None:
             "url",
             by=["lang", "day"],
             log2m=13,
-            engine=ENGINE,
         ).collect()
 
     def run_tokens():
@@ -87,9 +78,9 @@ def main(input_path: str, cores: int) -> None:
     # job amortizes it over hours
     warm = spark.read.parquet(input_path).limit(200_000).cache()
     warm.count()
-    hll_ndv(warm, "url", log2m=13, engine=ENGINE).first()
+    hll_ndv(warm, "url", log2m=13).first()
     hll_sketch(warm.withColumn("day", F.to_date("warc_ts")), "url",
-               by=["lang", "day"], log2m=13, engine=ENGINE).collect()
+               by=["lang", "day"], log2m=13).collect()
     heavy_hitters(
         warm.select(F.explode(F.split(F.lower("text"), " ")).alias("tok")),
         "tok", k=20, width=16384).collect()
@@ -122,7 +113,6 @@ def main(input_path: str, cores: int) -> None:
                 "docs_per_sec": round((n_rows * (R_NDV + R_GROUPED + 1)) / total, 1),
                 "docs_per_sec_ndv": round(n_rows * R_NDV / t_ndv, 1),
                 "replication": {"ndv": R_NDV, "grouped": R_GROUPED},
-                "engine": ENGINE,
             }
         )
     )
